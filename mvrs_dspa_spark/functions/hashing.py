@@ -49,8 +49,8 @@ def affine_col(x: Column, a: int, b: int) -> Column:
 
 
 def affine_sql(x: str, a: int, b: int) -> str:
-    """DuckDB SQL mirror of :func:`affine_col`."""
-    return f"(({a}::BIGINT * (({x})::BIGINT % {P}) + {b}) % {P})"
+    """SQL mirror of :func:`affine_col`, in the dialect Spark and DuckDB share."""
+    return f"((CAST({a} AS BIGINT) * (CAST(({x}) AS BIGINT) % {P}) + {b}) % {P})"
 
 
 # --- string -> int64 code (md5 prefix) ------------------------------------

@@ -12,6 +12,13 @@ shuffles only (band, band_hash) keys. Estimated similarity is the
 matching-component fraction of two fixed-width signatures — a
 map-side zip, no extra shuffle. At 100 TB the only heavy exchange is
 the item explode feeding the signature aggregation.
+
+The wide generated families (32 affine mins, per-hash array_min
+transforms, 16 band-hash folds) are built from their SQL text with one
+``F.expr`` each: the text is the one DuckDB runs (CAST, not ``::``, so
+Spark 3.5 parses it too), and one parse replaces the hundreds of py4j
+round trips the same tree costs through the Column API. The optimized
+plans are the same either way.
 """
 
 from __future__ import annotations
@@ -22,55 +29,58 @@ from pyspark.sql import functions as F
 from mvrs_dspa_spark.functions import hashing as H
 
 
+def _signature_mins(code_col: str, params: list[tuple[int, int]]) -> list[str]:
+    return [
+        f"MIN({H.affine_sql(code_col, a, b)}) AS m{i}" for i, (a, b) in enumerate(params)
+    ]
+
+
 def signature_df(
     items: DataFrame, id_col: str, code_col: str, params: list[tuple[int, int]]
 ) -> DataFrame:
     """Wide minhash signature: one m{i} column per hash."""
-    aggs = [
-        F.min(H.affine_col(F.col(code_col), a, b)).alias(f"m{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    return items.groupBy(id_col).agg(*aggs)
+    return items.groupBy(id_col).agg(
+        *[F.expr(m) for m in _signature_mins(code_col, params)]
+    )
 
 
 def signature_sql(
     items_sql: str, id_col: str, code_col: str, params: list[tuple[int, int]]
 ) -> str:
-    mins = ",\n               ".join(
-        f"MIN({H.affine_sql(code_col, a, b)}) AS m{i}" for i, (a, b) in enumerate(params)
-    )
+    mins = ",\n               ".join(_signature_mins(code_col, params))
     return f"SELECT {id_col}, {mins}\n        FROM ({items_sql})\n        GROUP BY {id_col}"
 
 
-def _band_hash_col(band: int, rows: int) -> Column:
-    acc: Column = F.lit(0).cast("long")
+def _wide(i: int) -> str:
+    return f"m{i}"
+
+
+def _band_hash_sql(band: int, rows: int, component=_wide) -> str:
+    """Band hash: 31-polynomial fold mod P over the band's signature
+    components; ``component(i)`` spells component i (wide m{i} columns
+    by default)."""
+    acc = "CAST(0 AS BIGINT)"
     for i in range(band * rows, (band + 1) * rows):
-        acc = (acc * F.lit(31) + F.col(f"m{i}")) % F.lit(H.P)
+        acc = f"(({acc}) * 31 + {component(i)}) % {H.P}"
     return acc
 
 
-def _band_hash_sql(band: int, rows: int) -> str:
-    acc = "0::BIGINT"
-    for i in range(band * rows, (band + 1) * rows):
-        acc = f"(({acc}) * 31 + m{i}) % {H.P}"
-    return acc
+def _band_hashes_col(n: int, bands: int, component=_wide) -> Column:
+    """ARRAY of all ``bands`` band hashes, one expression."""
+    rows = n // bands
+    return F.expr(
+        f"array({', '.join(_band_hash_sql(j, rows, component) for j in range(bands))})"
+    )
 
 
 def candidate_pairs_df(sig: DataFrame, id_col: str, n: int, bands: int) -> DataFrame:
     """Distinct (id_a < id_b) pairs sharing at least one LSH bucket."""
     rows = n // bands
+    structs = ", ".join(
+        f"struct({j} AS band, {_band_hash_sql(j, rows)} AS bh)" for j in range(bands)
+    )
     buckets = sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"), _band_hash_col(j, rows).alias("bh")
-                    )
-                    for j in range(bands)
-                ]
-            )
-        ).alias("bk"),
+        F.col(id_col), F.explode(F.expr(f"array({structs})")).alias("bk")
     ).select(id_col, "bk.band", "bk.bh")
     a, b = buckets.alias("a"), buckets.alias("b")
     return (
@@ -97,11 +107,10 @@ def bucket_rows_df(
     (computed once in the same pre-explode projection the band hashes
     already live in), so the first-matching-band dedup filter can
     compare earlier bands without recomputing any fold."""
-    rows = n // bands
-    bhs = F.array(*[_band_hash_col(j, rows) for j in range(bands)])
+    bhs = _band_hashes_col(n, bands)
     out = sig.select(
         F.col(id_col),
-        F.array(*[F.col(f"m{i}") for i in range(n)]).alias("sg"),
+        F.expr(f"array({', '.join(_wide(i) for i in range(n))})").alias("sg"),
         bhs.alias("bhs"),
         F.posexplode(bhs).alias("band", "bh"),
     )
@@ -129,25 +138,6 @@ def sig_match_count_col(a: Column, b: Column) -> Column:
 def sig_match_count_sql(n: int) -> str:
     """DuckDB mirror over sa.m{i}/sb.m{i} wide columns (int)."""
     return " + ".join(f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END" for i in range(n))
-
-
-# Materialize the (narrow) signature frame once via a lazy
-# localCheckpoint before the band self-join. Without it the ENTIRE
-# upstream signature pipeline — corpus scan, tokenize/regex, shingle
-# hashing, 32 min-aggregations — is planned and EXECUTED once per join
-# side (the probe-side Exchange and the build-side BroadcastExchange
-# cannot share, so ReuseExchange never fires): the r11 before-plans
-# show the events/documents scan subtree duplicated under both sides
-# of every candidate join (plans/r11/*_before.txt). Checkpointing the
-# signatures (one narrow row per set: id + n longs) makes both sides
-# read the materialized partitions — the corpus is scanned ONCE, which
-# is the posture that matters at 100 TB (guide §2.4: remove shuffles/
-# passes outright). Module flag so A/B harnesses can flip it.
-MATERIALIZE_SIGS = True
-
-
-def _materialized(sig: DataFrame) -> DataFrame:
-    return sig.localCheckpoint(eager=False) if MATERIALIZE_SIGS else sig
 
 
 def _first_matching_band_only(joined: DataFrame) -> DataFrame:
@@ -182,6 +172,18 @@ def _first_matching_band_only(joined: DataFrame) -> DataFrame:
     return joined.where(~earlier)
 
 
+# The scored-pair entry points materialize the (narrow) signature
+# frame once via a lazy localCheckpoint before the band self-join.
+# Without it the ENTIRE upstream signature pipeline — corpus scan,
+# tokenize/regex, shingle hashing, 32 min-aggregations — is planned and
+# EXECUTED once per join side (the probe-side Exchange and the
+# build-side BroadcastExchange cannot share, so ReuseExchange never
+# fires): the r11 before-plans show the events/documents scan subtree
+# duplicated under both sides of every candidate join
+# (plans/r11/*_before.txt). Checkpointing the signatures (one narrow row
+# per set: id + n longs) makes both sides read the materialized
+# partitions — the corpus is scanned ONCE, which is the posture that
+# matters at 100 TB (guide §2.4: remove shuffles/passes outright).
 def scored_candidate_pairs_df(
     sig: DataFrame, id_col: str, n: int, bands: int
 ) -> DataFrame:
@@ -202,8 +204,14 @@ def scored_candidate_pairs_df(
     dedup 2.59s -> 2.43s (min of 4, same JVM).
     """
     buckets = bucket_rows_df(
-        _materialized(sig), id_col, n, bands, with_bhs=True
+        sig.localCheckpoint(eager=False), id_col, n, bands, with_bhs=True
     )
+    return _scored_band_join(buckets, id_col, n)
+
+
+def _scored_band_join(buckets: DataFrame, id_col: str, n: int) -> DataFrame:
+    """Band self-join of (id, sg, bhs, band, bh) bucket rows into
+    (id_a < id_b, est_sim) pairs, each pair once."""
     a, b = buckets.alias("a"), buckets.alias("b")
     matches = sig_match_count_col(F.col("a.sg"), F.col("b.sg"))
     est = F.round(matches.cast("double") / F.lit(n), 6)
@@ -258,44 +266,31 @@ def candidate_pairs_from_sig_cte_sql(id_col: str, n: int, bands: int) -> str:
 
 def est_similarity_expr(n: int) -> Column:
     """Matching-component fraction between sa.m{i} and sb.m{i}."""
-    total: Column = F.lit(0)
-    for i in range(n):
-        total = total + (F.col(f"sa.m{i}") == F.col(f"sb.m{i}")).cast("int")
-    return F.round(total.cast("double") / F.lit(n), 6)
+    return F.expr(est_similarity_sql(n))
 
 
 def est_similarity_sql(n: int) -> str:
     terms = " + ".join(
         f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END" for i in range(n)
     )
-    return f"ROUND(({terms})::DOUBLE / {n}, 6)"
+    return f"ROUND(CAST(({terms}) AS DOUBLE) / {n}, 6)"
 
 
-def signature_array_col(codes: Column, params: list[tuple[int, int]]) -> Column:
-    """Per-ROW minhash signature from a shingle-code ARRAY column:
-    array_min of each affine hash family over the codes.
+def signature_array_col(codes: str, params: list[tuple[int, int]]) -> Column:
+    """Per-ROW minhash signature from the shingle-code ARRAY column
+    named ``codes``: array_min of each affine hash family over the
+    codes.
 
     Equivalent to :func:`signature_df`'s explode+groupBy form but
     narrow (no shuffle) — the right shape when the codes already sit
     in one array per document, e.g. on a stream where an aggregation
-    would be stateful."""
-    def hash_fn(a: int, b: int):
-        # closure factory, NOT default-arg capture: extra lambda params
-        # would be mistaken for higher-order-function arguments
-        return lambda c: H.affine_col(c, a, b)
-
-    return F.array(
-        *[F.array_min(F.transform(codes, hash_fn(a, b))) for (a, b) in params]
+    would be stateful. A computed codes array must be projected to a
+    named column first."""
+    mins = ", ".join(
+        f"array_min(transform({codes}, x -> {H.affine_sql('x', a, b)}))"
+        for a, b in params
     )
-
-
-def band_hash_from_sig_col(sig: Column, band: int, rows: int) -> Column:
-    """Band hash over an ARRAY-form signature (same fold as
-    :func:`_band_hash_col` over wide m{i} columns)."""
-    acc: Column = F.lit(0).cast("long")
-    for i in range(band * rows, (band + 1) * rows):
-        acc = (acc * F.lit(31) + F.element_at(sig, i + 1)) % F.lit(H.P)
-    return acc
+    return F.expr(f"array({mins})")
 
 
 def bucket_rows_from_sig_df(
@@ -303,14 +298,9 @@ def bucket_rows_from_sig_df(
 ) -> DataFrame:
     """Explode one (band, bh) row per band from an ARRAY-form
     signature column, all other columns riding along (plus the full
-    band-hash array when ``with_bhs`` — see bucket_rows_df)."""
-    rows = n // bands
-    bhs = F.array(
-        *[
-            band_hash_from_sig_col(F.col(sig_col), j, rows)
-            for j in range(bands)
-        ]
-    )
+    band-hash array when ``with_bhs`` — see bucket_rows_df). Same
+    fold as the wide form, component i read as element i+1."""
+    bhs = _band_hashes_col(n, bands, lambda i: f"element_at({sig_col}, {i + 1})")
     out = df.select(
         "*",
         bhs.alias("bhs"),
@@ -338,29 +328,15 @@ def scored_candidate_pairs_from_array_sig_df(
     band-bucket join itself).
 
     The projected (id, sg) frame is materialized once (lazy
-    localCheckpoint, see MATERIALIZE_SIGS) so the CPU-bound shingle
-    scan does not run once per join side."""
+    localCheckpoint, see the note above :func:`scored_candidate_pairs_df`)
+    so the CPU-bound shingle scan does not run once per join side."""
     buckets = bucket_rows_from_sig_df(
-        _materialized(
-            sig.select(F.col(id_col), F.col(sig_col).alias("sg"))
+        sig.select(F.col(id_col), F.col(sig_col).alias("sg")).localCheckpoint(
+            eager=False
         ),
         "sg",
         n,
         bands,
         with_bhs=True,
     )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    matches = sig_match_count_col(F.col("a.sg"), F.col("b.sg"))
-    est = F.round(matches.cast("double") / F.lit(n), 6)
-    joined = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bh") == F.col("b.bh"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    )
-    # first-matching-band filter replaces the groupBy(id_a, id_b) dedup
-    return _first_matching_band_only(joined).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-        est.alias("est_sim"),
-    )
+    return _scored_band_join(buckets, id_col, n)

@@ -162,7 +162,7 @@ def _doc_array_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the signature stage is projection-only (zero shuffles)."""
     sh = _doc_shingles(spark, sf_dir).where(F.size("sh") > 0)
     return sh.select(
-        "doc_id", MH.signature_array_col(F.col("sh"), _PARAMS).alias("sg")
+        "doc_id", MH.signature_array_col("sh", _PARAMS).alias("sg")
     )
 
 
@@ -198,7 +198,7 @@ def minhash_pairs_from_shingles(sh: DataFrame) -> DataFrame:
     this AND the exact pipeline off ONE checkpointed shingle scan).
     Signatures scored inside the band join (no sig re-join/distinct)."""
     sigs = sh.select(
-        "doc_id", MH.signature_array_col(F.col("sh"), _PARAMS).alias("sg")
+        "doc_id", MH.signature_array_col("sh", _PARAMS).alias("sg")
     )
     return (
         MH.scored_candidate_pairs_from_array_sig_df(
@@ -1183,7 +1183,7 @@ def minhash_containment_join(
     sigs = sh.select(
         "doc_id",
         F.size("sh").cast("long").alias("n"),
-        MH.signature_array_col(F.col("sh"), _PARAMS).alias("sg"),
+        MH.signature_array_col("sh", _PARAMS).alias("sg"),
     )
     buckets = MH.bucket_rows_from_sig_df(sigs, "sg", N_HASHES, BANDS)
     if df_cap is not None:

@@ -199,12 +199,12 @@ def streaming_near_dup(
         }[unit]
         docs = docs.withWatermark("ts", watermark_delay)
     sig = docs.select(
+        "doc_id", "ts", shingle_codes_col(F.col("text")).alias("_sh")
+    ).select(
         "doc_id",
         "ts",
-        MH.signature_array_col(
-            shingle_codes_col(F.col("text")), params
-        ).alias("sg"),
-        F.size(shingle_codes_col(F.col("text"))).alias("_n_sh"),
+        MH.signature_array_col("_sh", params).alias("sg"),
+        F.size("_sh").alias("_n_sh"),
     ).where(F.col("_n_sh") > 0)
     banded = MH.bucket_rows_from_sig_df(
         sig.select("doc_id", "ts", "sg"), "sg", n_hashes, bands
@@ -232,13 +232,11 @@ def batch_reference_near_dup(
     per-pair (doc_id, dup_of, est_sim) where dup_of is earlier by
     (ts, doc_id), using the SAME signature expressions."""
     params = H.hash_params(n_hashes, seed=SEED)
-    sig = docs.select(
-        "doc_id",
-        "ts",
-        MH.signature_array_col(
-            shingle_codes_col(F.col("text")), params
-        ).alias("sg"),
-    ).where(F.size(shingle_codes_col(F.col("text"))) > 0)
+    sig = (
+        docs.select("doc_id", "ts", shingle_codes_col(F.col("text")).alias("_sh"))
+        .where(F.size("_sh") > 0)
+        .select("doc_id", "ts", MH.signature_array_col("_sh", params).alias("sg"))
+    )
     banded = MH.bucket_rows_from_sig_df(sig, "sg", n_hashes, bands)
     a, b = banded.alias("a"), banded.alias("b")
     earlier = (F.col("b.ts") < F.col("a.ts")) | (
