@@ -67,10 +67,11 @@ def measure_stream_throughput(
     partitions / 1 batch (min-of-3, same JVM), i.e. wall ~= batches x
     partitions x commit_cost + linear row work. Size state partitions
     to state VOLUME (peak state rows / ~1M), never default them to
-    core count; the commit cost itself is Spark-internal
-    (HDFSBackedStateStore delta write + snapshot bookkeeping per
-    partition per batch; RocksDB is ~1.7x slower still at this state
-    size). In production the same lever is micro-batch sizing
+    core count. On a local session each created file costs its write,
+    its rename and about two `chmod` forks (the file and its `.crc`,
+    from `RawLocalFileSystem.setPermission` without libhadoop); the
+    `session.py` module docstring explains the checkpoint manager
+    choice. In production the same lever is micro-batch sizing
     (maxFilesPerTrigger / maxOffsetsPerTrigger): fewer, larger batches
     amortize the fixed commit cost.
     """
