@@ -78,6 +78,13 @@ def active_post_stats_job(
     With `dim`, each emitted window row is enriched via a stream-static
     broadcast join (see :func:`enrich_post_stats`) before the sink —
     the reference's enriched post-statistics topology.
+
+    The aggregation state holds one long for `n_users_approx`, an
+    exact per-user count (see :func:`sliding_stats_stream`). A
+    checkpoint whose state still holds the HLL++ sketch buffer of that
+    column fails Spark's state-schema check on resume
+    (STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE): start such a job from a
+    fresh checkpoint.
     """
     stats = sliding_stats_stream(events, size=size, slide=slide, watermark_delay=watermark)
     if dim is not None:

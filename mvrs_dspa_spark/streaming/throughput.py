@@ -71,9 +71,15 @@ def measure_stream_throughput(
     its rename and about two `chmod` forks (the file and its `.crc`,
     from `RawLocalFileSystem.setPermission` without libhadoop); the
     `session.py` module docstring explains the checkpoint manager
-    choice. In production the same lever is micro-batch sizing
-    (maxFilesPerTrigger / maxOffsetsPerTrigger): fewer, larger batches
-    amortize the fixed commit cost.
+    choice. Each state partition also pays a per-task setup in every
+    micro-batch; it stays small only while every aggregate of the
+    stateful chain is declarative, so its `HashAggregate`s run under
+    whole-stage codegen. One HLL, percentile or `collect_*` aggregate
+    sends the whole chain to the interpreted iterator, which builds its
+    projections again in every task (hence the exact per-user count in
+    `sliding_stats_stream`). In production the same lever is
+    micro-batch sizing (maxFilesPerTrigger / maxOffsetsPerTrigger):
+    fewer, larger batches amortize the fixed commit cost.
     """
     if source == "parquet":
         if parquet_dir is None:

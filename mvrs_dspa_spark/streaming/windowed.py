@@ -37,17 +37,30 @@ def sliding_stats_stream(
     Append output mode: a (key, window) row is emitted exactly once,
     when the watermark passes window end — the reference's
     window-fire-at-watermark behavior.
+
+    `n_users_approx` counts the distinct users of each (window, key)
+    group. Grouped by `user_id` that is exact and needs no sketch: 1
+    for every user, 0 for the null-user group (`count` skips nulls).
+    The HLL++ sketch is kept only for other keys, because it is an
+    `ImperativeAggregate`: one in the aggregation turns off whole-stage
+    codegen for every `HashAggregate` of the stateful chain (partial,
+    state restore, state save, final), and its 52-long buffer is stored
+    in every state row.
     """
     kind_counts = [
         F.count_if(F.col("event_type") == t).alias(f"n_{t}") for t in EVENT_TYPES
     ]
+    if key == "user_id":
+        n_users = (F.count("user_id") > 0).cast("long")
+    else:
+        n_users = F.approx_count_distinct("user_id")
     return (
         events.withWatermark("ts", watermark_delay)
         .groupBy(F.window("ts", size, slide).alias("w"), F.col(key))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             *kind_counts,
-            F.approx_count_distinct("user_id").alias("n_users_approx"),
+            n_users.alias("n_users_approx"),
             F.round(F.sum("value"), 2).alias("total_value"),
         )
         .select(

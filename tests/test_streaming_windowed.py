@@ -4,8 +4,9 @@
 from __future__ import annotations
 
 import os
+import re
 import time
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
 import pandas as pd
 
@@ -102,6 +103,69 @@ def test_sliding_stream_emits_closed_windows(spark, tmp_path):
     assert len(both) == 5
     assert all(r.n_click == 1 and r.n_purchase == 1 for r in both)
     assert all(abs(r.total_value - 5.0) < 1e-9 for r in both)
+
+
+# Two users (7, 8) plus one event with a null user; the late batch
+# pushes the watermark to 18:00, closing every window of batch 0.
+_USERS_BATCH = [
+    (1, _t(1, 0), 7, "click", 1.0),
+    (2, _t(1, 10), None, "click", 1.0),
+    (3, _t(1, 30), 8, "click", 1.0),
+    (4, _t(2, 0), 7, "view", 1.0),
+    (5, _t(2, 0), 8, "view", 1.0),
+    (6, _t(3, 0), 7, "click", 1.0),
+]
+_CLOSE_BATCH = [(7, _t(20, 0), 99, "view", 1.0)]
+
+
+def _sliding_run(spark, tmp_path, name, key):
+    root = _write_batches(spark, tmp_path, [_USERS_BATCH, _CLOSE_BATCH])
+    stream = (
+        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(root)
+    )
+    stats = sliding_stats_stream(stream, key=key, size="6 hours", slide="1 hour")
+    return _run(spark, stats, name)
+
+
+def test_sliding_stream_plan_is_whole_stage_codegen(spark, tmp_path):
+    # An ImperativeAggregate (HLL, percentile, collect_*) anywhere in the
+    # aggregation drops all four HashAggregate nodes of the stateful
+    # chain out of codegen; the per-user stream must keep them starred.
+    q = _sliding_run(spark, tmp_path, "slide_plan", "user_id")
+    aggs = [
+        line
+        for line in q._jsq.explainInternal(False).splitlines()
+        if "HashAggregate(" in line
+    ]
+    assert len(aggs) == 4, aggs
+    assert all(re.search(r"\*\(\d+\) HashAggregate\(", a) for a in aggs), aggs
+
+
+def test_sliding_stream_per_user_count_is_exact(spark, tmp_path):
+    _sliding_run(spark, tmp_path, "slide_users", "user_id")
+    rows = spark.sql("SELECT user_id, n_users_approx FROM slide_users").collect()
+    by_user = {}
+    for r in rows:
+        by_user.setdefault(r.user_id, set()).add(r.n_users_approx)
+    # user 7 spans 8 windows, user 8 spans 7, the null group 6
+    assert by_user == {7: {1}, 8: {1}, None: {0}}
+    assert len(rows) == 8 + 7 + 6
+
+
+def test_sliding_stream_other_key_counts_distinct_users(spark, tmp_path):
+    _sliding_run(spark, tmp_path, "slide_types", "event_type")
+    got = {
+        (r.window_start, r.event_type): r.n_users_approx
+        for r in spark.sql("SELECT * FROM slide_types").collect()
+    }
+    users = {}
+    for _, ts, user, etype, _ in _USERS_BATCH:
+        for back in range(6):
+            start = ts.replace(minute=0, tzinfo=None) - timedelta(hours=back)
+            seen = users.setdefault((start, etype), set())
+            if user is not None:
+                seen.add(user)
+    assert got == {k: len(v) for k, v in users.items()}
 
 
 def test_stateful_bucket_window(spark, tmp_path):
