@@ -221,6 +221,7 @@ def run(argv: list[str] | None = None) -> int:
     elif args.job == "drift":
         from pyspark.sql import functions as F
 
+        from mvrs_dspa_spark.streaming.monitor import feed
         from mvrs_dspa_spark.streaming.psi_stream import PsiMonitor
         from mvrs_dspa_spark.streaming.wasserstein_stream import (
             WassersteinMonitor,
@@ -242,23 +243,15 @@ def run(argv: list[str] | None = None) -> int:
 
         sd = args.state_dir
         if sd and os.path.exists(f"{sd}/psi"):
-            psi = PsiMonitor.load(spark, split, f"{sd}/psi")
-            w1 = WassersteinMonitor.load(spark, split, f"{sd}/wasserstein")
+            psi = PsiMonitor.load(spark, f"{sd}/psi", split)
+            w1 = WassersteinMonitor.load(spark, f"{sd}/wasserstein", split)
         else:
             psi = PsiMonitor(spark, split)
             w1 = WassersteinMonitor(spark, split)
 
-        def _update_both(df, batch_id):
-            df.persist()
-            try:
-                psi.update(df, batch_id)
-                w1.update(df, batch_id)
-            finally:
-                df.unpersist()
-
         q = (
             _events_stream(spark, args)
-            .writeStream.foreachBatch(_update_both)
+            .writeStream.foreachBatch(feed(psi.update, w1.update))
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start()

@@ -34,75 +34,57 @@ from mvrs_dspa_spark.operators.mlmodels import (
     _gramian,
     _solve_side,
 )
+from mvrs_dspa_spark.streaming.monitor import Monitor, drop_users, summed
 
 INTER_SCHEMA = "custkey long, partkey long, cnt long"
 FACTOR_SCHEMA = "custkey long, fac array<double>"
 
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 16
 
-
-class AlsFoldInServer:
+class AlsFoldInServer(Monitor):
     """Folds new users into a frozen item-factor model, one ridge
     solve per affected user per batch; serves top-N unseen items."""
 
-    def __init__(
-        self,
-        spark,
-        item_factors: DataFrame,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
+    STATE = {
+        "inter": (INTER_SCHEMA, "custkey"),
+        "factors": (FACTOR_SCHEMA, "custkey"),
+    }
+    COMPACT_TO = 16
+
+    def __init__(self, spark, item_factors: DataFrame) -> None:
         # frozen model: localCheckpoint so every batch reuses the
         # materialized factors instead of re-running their lineage;
         # the k x k Gramian is likewise computed ONCE here (the batch
         # fit collects it per half-step; a frozen model never changes)
         self.items = item_factors.localCheckpoint(eager=True)
         self.items_yty = _gramian(self.items)
-        self.inter: DataFrame = spark.createDataFrame([], INTER_SCHEMA)
-        self.factors: DataFrame = spark.createDataFrame([], FACTOR_SCHEMA)
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+        super().__init__(spark)
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         """batch_df: (custkey, partkey) interaction events."""
-        if batch_df.isEmpty():
-            return
         delta = batch_df.groupBy("custkey", "partkey").agg(
-            F.count(F.lit(1)).alias("d_cnt")
+            F.count(F.lit(1)).alias("cnt")
         )
-        merged = (
-            self.inter.join(delta, ["custkey", "partkey"], "full_outer")
-            .select(
-                "custkey",
-                "partkey",
-                (
-                    F.coalesce("cnt", F.lit(0))
-                    + F.coalesce("d_cnt", F.lit(0))
-                ).alias("cnt"),
-            )
+        # the re-solve reads the merged counts: settle them first
+        inter = self.settle(
+            "inter", summed(self.inter, delta, ["custkey", "partkey"])
         )
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(self.compact_to, "custkey")
-        self.inter = merged.localCheckpoint(eager=True)
-
         touched = delta.select("custkey").distinct()
         solved = _solve_side(
-            self.inter.join(F.broadcast(touched), "custkey"),
+            inter.join(F.broadcast(touched), "custkey"),
             self.items,
             "custkey",
             "partkey",
             self.items_yty,
         )
         kept = self.factors.join(touched, "custkey", "left_anti")
-        factors = kept.unionByName(solved)
-        if factors.rdd.getNumPartitions() > self.compact_cap:
-            factors = factors.repartition(self.compact_to, "custkey")
-        self.factors = factors.localCheckpoint(eager=True)
-        self.n_batches += 1
+        return {"factors": kept.unionByName(solved)}
 
+    def erase_users(self, user_ids) -> None:
+        """GDPR erasure: the folded-in customers' interactions and
+        factor vectors drop; a returning customer folds in afresh."""
+        ids = list(user_ids)
+        self.inter = drop_users(self.inter, ids, "custkey")
+        self.factors = drop_users(self.factors, ids, "custkey")
     def recommend(self, n: int = ALS_REC_N) -> DataFrame:
         """Top-n unseen items for every folded-in user (the batch
         query's serving join, over the maintained factor table)."""
@@ -131,20 +113,3 @@ class AlsFoldInServer:
             .orderBy("custkey", "rank")
         )
 
-
-def run_als_fold_in(
-    source: DataFrame, item_factors: DataFrame, checkpoint: str
-) -> AlsFoldInServer:
-    """Drive a bounded interaction stream to completion; returns the
-    server holding folded-in user factors."""
-    server = AlsFoldInServer(source.sparkSession, item_factors)
-    q = (
-        source.writeStream.foreachBatch(server.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("als fold-in stream did not finish within 300s")
-    return server

@@ -28,52 +28,35 @@ from mvrs_dspa_spark.operators.ann import (
     maintenance_cell_stats,
     maintenance_report_from_stats,
 )
+from mvrs_dspa_spark.streaming.monitor import Monitor, summed
 
 STATE_SCHEMA = "cluster int, is_base boolean, n long, s_d2 long"
 
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 8
 
-
-class AnnMaintenanceMonitor:
+class AnnMaintenanceMonitor(Monitor):
     """Maintains per-cell base/delta occupancy + exact distance sums
     for a PINNED integer-grid coarse quantizer across micro-batches of
     (vec_id, embedding) rows."""
 
+    STATE = {"state": (STATE_SCHEMA, "cluster")}
+
     def __init__(
-        self,
-        spark,
-        cents: list[list[int]],
-        mod: int = ANN_INCR_MOD,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
+        self, spark, cents: list[list[int]], mod: int = ANN_INCR_MOD
     ) -> None:
         if not cents:
             raise ValueError("AnnMaintenanceMonitor needs a trained quantizer")
-        self.spark = spark
         self.cents = [[int(x) for x in c] for c in cents]
         self.mod = mod
-        self.state: DataFrame = spark.createDataFrame([], STATE_SCHEMA)
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+        super().__init__(spark)
 
-    def _merge(self, delta: DataFrame) -> None:
-        merged = (
-            self.state.unionByName(delta)
-            .groupBy("cluster", "is_base")
-            .agg(F.sum("n").alias("n"), F.sum("s_d2").alias("s_d2"))
-            .where(F.col("n") > 0)  # fully-erased cells leave no row
+    def _merged(self, delta: DataFrame) -> DataFrame:
+        return summed(self.state, delta, ["cluster", "is_base"]).where(
+            F.col("n") > 0  # fully-erased cells leave no row
         )
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(self.compact_to, "cluster")
-        self.state = merged.localCheckpoint(eager=True)
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        self._merge(maintenance_cell_stats(batch_df, self.cents, self.mod))
-        self.n_batches += 1
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
+        delta = maintenance_cell_stats(batch_df, self.cents, self.mod)
+        return {"state": self._merged(delta)}
 
     def erase_vectors(self, vectors_df: DataFrame) -> None:
         """Subtract the exact contribution of the given
@@ -89,43 +72,9 @@ class AnnMaintenanceMonitor:
             (-F.col("n")).alias("n"),
             (-F.col("s_d2")).alias("s_d2"),
         )
-        self._merge(gone)
+        self.settle("state", self._merged(gone))
 
     def report(self) -> DataFrame:
         """The maintenance report through the SAME serving tail as the
         registered #87 batch query."""
         return maintenance_report_from_stats(self.state)
-
-    def save(self, path: str) -> None:
-        self.state.write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(
-        cls, spark, path: str, cents: list[list[int]], **kw
-    ) -> "AnnMaintenanceMonitor":
-        mon = cls(spark, cents, **kw)
-        mon.state = (
-            spark.read.parquet(path)
-            .select("cluster", "is_base", "n", "s_d2")
-            .localCheckpoint(eager=True)
-        )
-        return mon
-
-
-def run_ann_maintenance_stream(
-    source: DataFrame, checkpoint: str, cents: list[list[int]]
-) -> AnnMaintenanceMonitor:
-    """Drive a bounded (vec_id, embedding) stream to completion
-    against a trained quantizer; returns the monitor holding the
-    final per-cell stats."""
-    monitor = AnnMaintenanceMonitor(source.sparkSession, cents)
-    q = (
-        source.writeStream.foreachBatch(monitor.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("ann-maintenance stream did not finish in 300s")
-    return monitor

@@ -34,6 +34,7 @@ from mvrs_dspa_spark.operators.sketches import (
     bloom_bits,
     bloom_claims,
 )
+from mvrs_dspa_spark.streaming.monitor import Monitor
 
 STATE_SCHEMA = "bit long"
 
@@ -43,24 +44,14 @@ def known_filter(df: DataFrame) -> DataFrame:
     return df.select("user_id").where(F.col("user_id") % 3 != 0)
 
 
-class BloomMonitor:
+class BloomMonitor(Monitor):
     """Maintains the set-bit table across micro-batches."""
 
-    def __init__(self, spark) -> None:
-        self.spark = spark
-        self.state: DataFrame = spark.createDataFrame([], STATE_SCHEMA)
-        self.n_batches = 0
+    STATE = {"state": (STATE_SCHEMA, None)}
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         delta = bloom_bits(known_filter(batch_df))
-        self.state = (
-            self.state.unionByName(delta)
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        self.n_batches += 1
+        return {"state": self.state.unionByName(delta).distinct()}
 
     def claims(self, probes: DataFrame) -> DataFrame:
         """user_id rows the maintained filter claims present — the
@@ -87,30 +78,3 @@ class BloomMonitor:
             "rebuild from the retained log (or member-level counting "
             "state, which defeats the bounded-bits design)"
         )
-
-    def save(self, path: str) -> None:
-        self.state.write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(cls, spark, path: str) -> "BloomMonitor":
-        mon = cls(spark)
-        mon.state = (
-            spark.read.parquet(path).select("bit").localCheckpoint(eager=True)
-        )
-        return mon
-
-
-def run_bloom_stream(source: DataFrame, checkpoint: str) -> BloomMonitor:
-    """Drive a bounded event stream to completion; returns the monitor
-    holding the final bit state."""
-    monitor = BloomMonitor(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(monitor.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("bloom stream did not finish within 300s")
-    return monitor

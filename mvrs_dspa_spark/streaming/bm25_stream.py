@@ -32,41 +32,33 @@ from mvrs_dspa_spark.operators.retrieval import (
     TOP_N,
     bm25_from_postings,
 )
+from mvrs_dspa_spark.streaming.monitor import Monitor
 
 POSTINGS_SCHEMA = "doc_id long, dl int, tok string, tf long"
 DOCLEN_SCHEMA = "doc_id long, dl int"
 
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 8
 
-
-class Bm25IndexMaintainer:
+class Bm25IndexMaintainer(Monitor):
     """Accumulates query-vocabulary postings + corpus stats across
     micro-batches; `report()` serves the batch query's exact ranked
     table."""
 
+    # doclen: per-doc lengths (every doc, postings or not), the stats
+    # source AND what makes erasure exact for posting-free docs
+    STATE = {
+        "postings": (POSTINGS_SCHEMA, "tok"),
+        "doclen": (DOCLEN_SCHEMA, "doc_id"),
+    }
+
     def __init__(
-        self,
-        spark,
-        terms: tuple[str, ...] = GATE_QUERY_TERMS,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
+        self, spark, terms: tuple[str, ...] = GATE_QUERY_TERMS
     ) -> None:
-        self.spark = spark
         self.terms = tuple(terms)
-        self.postings: DataFrame = spark.createDataFrame([], POSTINGS_SCHEMA)
-        # per-doc lengths (every doc, postings or not): the stats
-        # source AND what makes erasure exact for posting-free docs
-        self.doclen: DataFrame = spark.createDataFrame([], DOCLEN_SCHEMA)
         self.n_docs = 0
         self.sum_dl = 0
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+        super().__init__(spark)
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         toks = batch_df.select(
             "doc_id", T.tokens_col(F.lower(F.col("text"))).alias("toks")
         )
@@ -78,10 +70,6 @@ class Bm25IndexMaintainer:
         dl = toks.select(
             "doc_id", "toks", F.size("toks").alias("dl")
         ).localCheckpoint(eager=True)
-        new_doclen = self.doclen.unionByName(dl.select("doc_id", "dl"))
-        if new_doclen.rdd.getNumPartitions() > self.compact_cap:
-            new_doclen = new_doclen.repartition(self.compact_to, "doc_id")
-        self.doclen = new_doclen.localCheckpoint(eager=True)
         stats = dl.agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.sum("dl"), F.lit(0)).alias("s"),
@@ -101,13 +89,12 @@ class Bm25IndexMaintainer:
             .groupBy("doc_id", "dl", "tok")
             .agg(F.count(F.lit(1)).alias("tf"))
         )
-        merged = self.postings.unionByName(delta)
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(self.compact_to, "tok")
-        self.postings = merged.localCheckpoint(eager=True)
         self.n_docs += int(stats.n)
         self.sum_dl += int(stats.s)
-        self.n_batches += 1
+        return {
+            "postings": self.postings.unionByName(delta),
+            "doclen": self.doclen.unionByName(dl.select("doc_id", "dl")),
+        }
 
     def report(self, top_n: int = TOP_N) -> DataFrame:
         """Ranked BM25 table through the SAME scoring tail the batch
@@ -142,42 +129,16 @@ class Bm25IndexMaintainer:
         self.sum_dl -= sum(r.dl for r in gone)
 
     def save(self, path: str) -> None:
-        """Persist the index for driver-restart durability."""
-        self.postings.write.mode("overwrite").parquet(f"{path}/postings")
-        self.doclen.write.mode("overwrite").parquet(f"{path}/doclen")
+        """The frames, plus the scalar corpus stats at `path/stats`."""
+        super().save(path)
         self.spark.createDataFrame(
             [(self.n_docs, self.sum_dl)], "n_docs long, sum_dl long"
         ).write.mode("overwrite").parquet(f"{path}/stats")
 
     @classmethod
-    def load(cls, spark, path: str, **kw) -> "Bm25IndexMaintainer":
-        mon = cls(spark, **kw)
-        mon.postings = (
-            spark.read.parquet(f"{path}/postings")
-            .select("doc_id", "dl", "tok", "tf")
-            .localCheckpoint(eager=True)
-        )
-        mon.doclen = (
-            spark.read.parquet(f"{path}/doclen")
-            .select("doc_id", "dl")
-            .localCheckpoint(eager=True)
-        )
+    def load(cls, spark, path: str, *args) -> "Bm25IndexMaintainer":
+        mon = super().load(spark, path, *args)
         r = spark.read.parquet(f"{path}/stats").collect()[0]
         mon.n_docs, mon.sum_dl = int(r.n_docs), int(r.sum_dl)
         return mon
 
-
-def run_bm25_stream(source: DataFrame, checkpoint: str) -> Bm25IndexMaintainer:
-    """Drive a bounded document stream to completion; returns the
-    maintainer holding the final index."""
-    mon = Bm25IndexMaintainer(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(mon.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("bm25 stream did not finish within 300s")
-    return mon

@@ -14,91 +14,29 @@ drift: PSI/W1/KS; tests: SPRT/rank; this: CI width).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from mvrs_dspa_spark.plans.analytics5 import (
     bootstrap_ci_from_reps,
     bootstrap_rep_sums,
 )
+from mvrs_dspa_spark.streaming.monitor import Monitor, summed
 
 STATE_SCHEMA = (
     "event_type string, b int, swx decimal(38,0), sw long, "
     "n long, sx decimal(38,0)"
 )
 
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 8
 
-
-class BootstrapMonitor:
+class BootstrapMonitor(Monitor):
     """Maintains the additive per-(type, replicate) weighted sums
     across micro-batches; `report()` serves the CI table."""
 
-    def __init__(
-        self,
-        spark,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.state: DataFrame = spark.createDataFrame([], STATE_SCHEMA)
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    STATE = {"state": (STATE_SCHEMA, "event_type")}
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         delta = bootstrap_rep_sums(batch_df)
-        merged = (
-            self.state.unionByName(delta)
-            .groupBy("event_type", "b")
-            .agg(
-                F.sum("swx").alias("swx"),
-                F.sum("sw").alias("sw"),
-                F.sum("n").alias("n"),
-                F.sum("sx").alias("sx"),
-            )
-        )
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(self.compact_to, "event_type")
-        self.state = merged.localCheckpoint(eager=True)
-        self.n_batches += 1
+        return {"state": summed(self.state, delta, ["event_type", "b"])}
 
     def report(self) -> DataFrame:
         """The CI table through the SAME serving tail as #194."""
         return bootstrap_ci_from_reps(self.state)
-
-    def erase_users(self, user_ids) -> None:
-        """No-op by construction (the PsiMonitor posture): replicate
-        sums aggregate over events with no per-user state; erasure
-        happens upstream on the retained log."""
-
-    def save(self, path: str) -> None:
-        self.state.write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(cls, spark, path: str, **kw) -> "BootstrapMonitor":
-        mon = cls(spark, **kw)
-        mon.state = (
-            spark.read.parquet(path)
-            .select("event_type", "b", "swx", "sw", "n", "sx")
-            .localCheckpoint(eager=True)
-        )
-        return mon
-
-
-def run_bootstrap_stream(source: DataFrame, checkpoint: str) -> BootstrapMonitor:
-    """Drive a bounded event stream to completion; returns the monitor
-    holding the final replicate-sum state."""
-    monitor = BootstrapMonitor(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(monitor.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("bootstrap stream did not finish within 300s")
-    return monitor

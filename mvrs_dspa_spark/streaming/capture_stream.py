@@ -21,47 +21,31 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mvrs_dspa_spark.plans.analytics5 import capture_table_from_flags
+from mvrs_dspa_spark.streaming.monitor import Monitor, drop_users, summed
 
 STATE_SCHEMA = "user_id long, in1 int, in2 int"
 
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 8
 
-
-class CaptureMonitor:
+class CaptureMonitor(Monitor):
     """Maintains per-user capture flags across micro-batches."""
 
-    def __init__(
-        self,
-        spark,
-        split_us: int,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.split_us = int(split_us)
-        self.state: DataFrame = spark.createDataFrame([], STATE_SCHEMA)
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    STATE = {"state": (STATE_SCHEMA, "user_id")}
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def __init__(self, spark, split_us: int) -> None:
+        self.split_us = int(split_us)
+        super().__init__(spark)
+
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         pre = F.unix_micros("ts") < F.lit(self.split_us)
         delta = batch_df.groupBy("user_id").agg(
             F.max(F.when(pre, 1).otherwise(0)).alias("in1"),
             F.max(F.when(~pre, 1).otherwise(0)).alias("in2"),
         )
-        merged = (
-            self.state.unionByName(delta)
-            .groupBy("user_id")
-            .agg(F.max("in1").alias("in1"), F.max("in2").alias("in2"))
-        )
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(self.compact_to, "user_id")
-        self.state = merged.localCheckpoint(eager=True)
-        self.n_batches += 1
+        return {
+            "state": summed(
+                self.state, delta, ["user_id"], maxed=("in1", "in2")
+            )
+        }
 
     def report(self) -> DataFrame:
         """The Chapman table through the SAME serving tail as #198."""
@@ -70,41 +54,4 @@ class CaptureMonitor:
     def erase_users(self, user_ids) -> None:
         """REAL erasure: the state is per-user, so dropping the
         subjects' rows removes them from every served count."""
-        ids = [int(u) for u in user_ids]
-        if not ids:
-            return
-        gone = self.spark.createDataFrame([(u,) for u in ids], "gone long")
-        self.state = self.state.join(
-            gone, self.state["user_id"] == gone["gone"], "left_anti"
-        ).localCheckpoint(eager=True)
-
-    def save(self, path: str) -> None:
-        self.state.write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(cls, spark, split_us: int, path: str, **kw) -> "CaptureMonitor":
-        mon = cls(spark, split_us, **kw)
-        mon.state = (
-            spark.read.parquet(path)
-            .select("user_id", "in1", "in2")
-            .localCheckpoint(eager=True)
-        )
-        return mon
-
-
-def run_capture_stream(
-    source: DataFrame, checkpoint: str, split_us: int
-) -> CaptureMonitor:
-    """Drive a bounded event stream to completion; returns the monitor
-    holding the final flag state."""
-    monitor = CaptureMonitor(source.sparkSession, split_us)
-    q = (
-        source.writeStream.foreachBatch(monitor.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("capture stream did not finish within 300s")
-    return monitor
+        self.state = drop_users(self.state, user_ids)

@@ -24,45 +24,23 @@ from mvrs_dspa_spark.plans.analytics import (
     cusum_cents_col,
     cusum_from_hourly,
 )
+from mvrs_dspa_spark.streaming.monitor import Monitor, summed
 
 STATE_SCHEMA = "event_type string, hour timestamp, x_c long"
 
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 8
 
-
-class CusumMonitor:
+class CusumMonitor(Monitor):
     """Maintains the additive hourly cent-sum grid across
     micro-batches; `report()` serves the changepoint table in the
     batch query's shape via the shared tail."""
 
-    def __init__(
-        self,
-        spark,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.state: DataFrame = spark.createDataFrame([], STATE_SCHEMA)
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    STATE = {"state": (STATE_SCHEMA, "event_type")}
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         delta = batch_df.groupBy(
             "event_type", F.date_trunc("hour", "ts").alias("hour")
         ).agg(F.sum(cusum_cents_col()).alias("x_c"))
-        merged = (
-            self.state.unionByName(delta)
-            .groupBy("event_type", "hour")
-            .agg(F.sum("x_c").alias("x_c"))
-        )
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(self.compact_to, "event_type")
-        self.state = merged.localCheckpoint(eager=True)
-        self.n_batches += 1
+        return {"state": summed(self.state, delta, ["event_type", "hour"])}
 
     def report(self) -> DataFrame:
         """The changepoint table through the SAME serving tail as
@@ -79,39 +57,3 @@ class CusumMonitor:
         )
 
         return segmented_trend_from_cells(self.state)
-
-    def erase_users(self, user_ids) -> None:
-        """No-op by construction (see PsiMonitor.erase_users): the
-        grid holds per-hour aggregate cent sums with no per-user
-        attribution, so there is nothing subject-linked to delete;
-        erasure happens upstream on the retained event log."""
-
-    def save(self, path: str) -> None:
-        """Persist the hourly grid for driver-restart durability."""
-        self.state.write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(cls, spark, path: str, **kw) -> "CusumMonitor":
-        mon = cls(spark, **kw)
-        mon.state = (
-            spark.read.parquet(path)
-            .select("event_type", "hour", "x_c")
-            .localCheckpoint(eager=True)
-        )
-        return mon
-
-
-def run_cusum_stream(source: DataFrame, checkpoint: str) -> CusumMonitor:
-    """Drive a bounded event stream to completion; returns the monitor
-    holding the final hourly grid."""
-    monitor = CusumMonitor(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(monitor.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("cusum stream did not finish within 300s")
-    return monitor

@@ -14,85 +14,27 @@ pin). The representation-space member of the continuous drift family
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from mvrs_dspa_spark.operators.embeddings import (
     embedding_dim_sums,
     embedding_drift_from_sums,
 )
+from mvrs_dspa_spark.streaming.monitor import Monitor, summed
 
 STATE_SCHEMA = "label int, period int, dim int, s_c long, n long"
 
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 8
 
-
-class EmbeddingDriftMonitor:
+class EmbeddingDriftMonitor(Monitor):
     """Maintains the additive per-dimension coded-sum grid across
     micro-batches of (vec_id, embedding, label) rows."""
 
-    def __init__(
-        self,
-        spark,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.state: DataFrame = spark.createDataFrame([], STATE_SCHEMA)
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    STATE = {"state": (STATE_SCHEMA, "label")}
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         delta = embedding_dim_sums(batch_df)
-        merged = (
-            self.state.unionByName(delta)
-            .groupBy("label", "period", "dim")
-            .agg(F.sum("s_c").alias("s_c"), F.sum("n").alias("n"))
-        )
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(self.compact_to, "label")
-        self.state = merged.localCheckpoint(eager=True)
-        self.n_batches += 1
+        keys = ["label", "period", "dim"]
+        return {"state": summed(self.state, delta, keys)}
 
     def report(self) -> DataFrame:
         """The drift table through the SAME serving tail as #191."""
         return embedding_drift_from_sums(self.state)
-
-    def erase_users(self, user_ids) -> None:
-        """No-op by construction (the PsiMonitor posture): the grid
-        holds per-dimension aggregate sums with no per-subject
-        attribution; erasure happens upstream on the retained log."""
-
-    def save(self, path: str) -> None:
-        self.state.write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(cls, spark, path: str, **kw) -> "EmbeddingDriftMonitor":
-        mon = cls(spark, **kw)
-        mon.state = (
-            spark.read.parquet(path)
-            .select("label", "period", "dim", "s_c", "n")
-            .localCheckpoint(eager=True)
-        )
-        return mon
-
-
-def run_embdrift_stream(
-    source: DataFrame, checkpoint: str
-) -> EmbeddingDriftMonitor:
-    """Drive a bounded embedding stream to completion; returns the
-    monitor holding the final coded-sum grid."""
-    monitor = EmbeddingDriftMonitor(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(monitor.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("embedding-drift stream did not finish in 300s")
-    return monitor

@@ -20,54 +20,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mvrs_dspa_spark.streaming.scd2_stream import (
-    COMPACT_PARTITION_CAP,
-    COMPACT_TO,
-)
+from mvrs_dspa_spark.streaming.monitor import Monitor, drop_users
 
 _DAY_US = 86_400_000_000
 
 PAIRS_SCHEMA = "user_id long, day long"
 
 
-class EngagementMaintainer:
+class EngagementMaintainer(Monitor):
     """Accumulates the distinct (user, day) activity set across
     micro-batches; `stickiness()` serves the DAU/WAU table."""
 
-    def __init__(
-        self,
-        spark,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.pairs: DataFrame = spark.createDataFrame([], PAIRS_SCHEMA)
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    STATE = {"pairs": (PAIRS_SCHEMA, "user_id")}
+    COMPACT_TO = 16
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         delta = batch_df.select(
             "user_id",
             F.expr(f"unix_micros(ts) div {_DAY_US}").alias("day"),
         ).distinct()
-        merged = self.pairs.unionByName(delta).distinct()
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(self.compact_to, "user_id")
-        self.pairs = merged.localCheckpoint(eager=True)
-        self.n_batches += 1
+        return {"pairs": self.pairs.unionByName(delta).distinct()}
 
     def erase_users(self, user_ids) -> None:
         """GDPR erasure (see `scd2_stream.Scd2Maintainer.erase_users`):
         the subject's activity days vanish from every future serving."""
-        ids = list(user_ids)
-        self.pairs = self.pairs.where(
-            # NULL-safe: ~isin() is NULL for a NULL key, which would
-            # silently erase all null-keyed state too (ADVICE r6)
-            ~F.col("user_id").isin(ids) | F.col("user_id").isNull()
-        ).localCheckpoint(eager=True)
+        self.pairs = drop_users(self.pairs, user_ids)
 
     def stickiness(self) -> DataFrame:
         """The DAU/WAU table in the batch operator's shape, served
@@ -95,21 +72,3 @@ class EngagementMaintainer:
             )
             .orderBy("day")
         )
-
-
-def run_engagement_stream(
-    source: DataFrame, checkpoint: str
-) -> EngagementMaintainer:
-    """Drive a bounded event stream to completion; returns the
-    maintainer holding the distinct activity set."""
-    maintainer = EngagementMaintainer(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(maintainer.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("engagement stream did not finish within 300s")
-    return maintainer

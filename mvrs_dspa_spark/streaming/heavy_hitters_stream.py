@@ -25,7 +25,7 @@ the trending top-K job (trending.py). Driver state is the D*W grid
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mvrs_dspa_spark.functions import hashing as H
@@ -114,22 +114,3 @@ class HeavyHitterMonitor:
         scored.sort(key=lambda x: (-x[1], x[0]))
         return scored[:k]
 
-
-def run_heavy_hitter_stream(
-    spark: SparkSession, source: DataFrame, checkpoint: str
-) -> HeavyHitterMonitor:
-    """Drive a bounded document stream to completion, returning the
-    monitor with the final grid + candidates."""
-    mon = HeavyHitterMonitor()
-    q = (
-        source.writeStream.foreachBatch(mon.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # a timed-out stream must fail loudly: a silently partial grid would
-    # surface later as a confusing batch/stream mismatch
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError("heavy-hitter stream did not finish within 180s")
-    return mon

@@ -38,33 +38,21 @@ from mvrs_dspa_spark.plans.analytics2 import (
     _mk_cells_exprs_weighted,
     markov_table_from_cells,
 )
+from mvrs_dspa_spark.streaming.monitor import Monitor, drop_users, summed
 
 GRID_SCHEMA = "src string, dst string, n long"
 LAST_SCHEMA = "user_id long, ts_us long, event_id long, last_type string"
 
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 8
 
-
-class MarkovMonitor:
+class MarkovMonitor(Monitor):
     """Maintains the transition grid + open-journey frame."""
 
-    def __init__(
-        self,
-        spark,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.grid: DataFrame = spark.createDataFrame([], GRID_SCHEMA)
-        self.last: DataFrame = spark.createDataFrame([], LAST_SCHEMA)
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    STATE = {
+        "grid": (GRID_SCHEMA, "src"),
+        "last": (LAST_SCHEMA, "user_id"),
+    }
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         ev = batch_df.select(
             "user_id",
             "event_id",
@@ -115,11 +103,7 @@ class MarkovMonitor:
             .groupBy("src", "dst")
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
-        grid = (
-            self.grid.unionByName(deltas)
-            .groupBy("src", "dst")
-            .agg(F.sum("n").cast("long").alias("n"))
-        )
+        grid = summed(self.grid, deltas, ["src", "dst"])
         # open-journey frame: the batch's last event per user replaces
         # the carried row (struct-max keeps the latest (ts, event_id))
         batch_last = ev.groupBy("user_id").agg(
@@ -145,13 +129,7 @@ class MarkovMonitor:
                 F.col("m.last_type").alias("last_type"),
             )
         )
-        if last.rdd.getNumPartitions() > self.compact_cap:
-            last = last.repartition(self.compact_to, "user_id")
-        if grid.rdd.getNumPartitions() > self.compact_cap:
-            grid = grid.repartition(self.compact_to, "src")
-        self.grid = grid.localCheckpoint(eager=True)
-        self.last = last.localCheckpoint(eager=True)
-        self.n_batches += 1
+        return {"grid": grid, "last": last}
 
     def report(self) -> DataFrame:
         """The attribution table through the SHARED Cramer tail: grid
@@ -172,44 +150,5 @@ class MarkovMonitor:
         pending 'null' closure leaves every served report — REAL);
         their closed transitions exist only as aggregate grid counts
         with no per-user attribution (counts-only posture)."""
-        ids = [int(u) for u in user_ids]
-        if not ids:
-            return
-        gone = self.spark.createDataFrame([(u,) for u in ids], "gone long")
-        self.last = self.last.join(
-            gone, self.last["user_id"] == gone["gone"], "left_anti"
-        ).localCheckpoint(eager=True)
+        self.last = drop_users(self.last, user_ids)
 
-    def save(self, path: str) -> None:
-        self.grid.write.mode("overwrite").parquet(f"{path}/grid")
-        self.last.write.mode("overwrite").parquet(f"{path}/last")
-
-    @classmethod
-    def load(cls, spark, path: str, **kw) -> "MarkovMonitor":
-        mon = cls(spark, **kw)
-        mon.grid = (
-            spark.read.parquet(f"{path}/grid")
-            .select("src", "dst", "n")
-            .localCheckpoint(eager=True)
-        )
-        mon.last = (
-            spark.read.parquet(f"{path}/last")
-            .select("user_id", "ts_us", "event_id", "last_type")
-            .localCheckpoint(eager=True)
-        )
-        return mon
-
-
-def run_markov_stream(source: DataFrame, checkpoint: str) -> MarkovMonitor:
-    """Drive a bounded time-ordered event stream to completion."""
-    monitor = MarkovMonitor(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(monitor.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("markov stream did not finish within 300s")
-    return monitor

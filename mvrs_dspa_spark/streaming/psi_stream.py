@@ -29,35 +29,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mvrs_dspa_spark.plans.analytics import psi_bucket_col, psi_from_counts
+from mvrs_dspa_spark.streaming.monitor import Monitor, summed
 
 GRID_SCHEMA = "event_type string, period int, bucket long, c long"
 
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 8
 
-
-class PsiMonitor:
+class PsiMonitor(Monitor):
     """Accumulates the (type, period, bucket) count grid across
     micro-batches; `report()` serves the PSI table in the batch
     query's exact shape."""
 
-    def __init__(
-        self,
-        spark,
-        split_us: int,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.split_us = int(split_us)
-        self.grid: DataFrame = spark.createDataFrame([], GRID_SCHEMA)
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    STATE = {"grid": (GRID_SCHEMA, ("event_type", "bucket"))}
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def __init__(self, spark, split_us: int) -> None:
+        self.split_us = int(split_us)
+        super().__init__(spark)
+
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         delta = (
             batch_df.select(
                 "event_type",
@@ -68,71 +56,12 @@ class PsiMonitor:
                 psi_bucket_col().alias("bucket"),
             )
             .groupBy("event_type", "period", "bucket")
-            .agg(F.count(F.lit(1)).alias("d_c"))
+            .agg(F.count(F.lit(1)).alias("c"))
         )
-        merged = self.grid.join(
-            delta, ["event_type", "period", "bucket"], "full_outer"
-        ).select(
-            "event_type",
-            "period",
-            "bucket",
-            (
-                F.coalesce("c", F.lit(0)) + F.coalesce("d_c", F.lit(0))
-            ).alias("c"),
-        )
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(
-                self.compact_to, "event_type", "bucket"
-            )
-        self.grid = merged.localCheckpoint(eager=True)
-        self.n_batches += 1
+        keys = ["event_type", "period", "bucket"]
+        return {"grid": summed(self.grid, delta, keys)}
 
     def report(self) -> DataFrame:
         """PSI per event type through the SAME serving tail the batch
         query uses, from the maintained bounded grid."""
         return psi_from_counts(self.grid)
-
-    def erase_users(self, user_ids) -> None:
-        """GDPR hook parity with the other stateful maintainers (see
-        `scd2_stream.Scd2Maintainer.erase_users`): the grid keys on
-        (type, period, bucket) only — no per-user state exists, so
-        erasure is a no-op by construction (documented, not silently
-        absent; the counts are aggregates the subject's rows already
-        dissolved into, the same posture as dp_event_counts)."""
-        return None
-
-    def save(self, path: str) -> None:
-        """Persist the grid for driver-restart durability (the
-        in-memory localCheckpoint state dies with the driver; pair
-        with the stream's checkpointLocation so a restarted query
-        resumes from the next unprocessed batch AND the reloaded
-        grid — restart==uninterrupted pytest-pinned)."""
-        self.grid.write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(cls, spark, split_us: int, path: str, **kw) -> "PsiMonitor":
-        mon = cls(spark, split_us, **kw)
-        mon.grid = (
-            spark.read.parquet(path)
-            .select("event_type", "period", "bucket", "c")
-            .localCheckpoint(eager=True)
-        )
-        return mon
-
-
-def run_psi_stream(
-    source: DataFrame, checkpoint: str, split_us: int
-) -> PsiMonitor:
-    """Drive a bounded event stream to completion; returns the monitor
-    holding the final count grid."""
-    monitor = PsiMonitor(source.sparkSession, split_us)
-    q = (
-        source.writeStream.foreachBatch(monitor.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("psi stream did not finish within 300s")
-    return monitor

@@ -28,46 +28,24 @@ from mvrs_dspa_spark.plans.analytics5 import (
     rank_cents_col,
     rank_stats_from_tgrid,
 )
+from mvrs_dspa_spark.streaming.monitor import Monitor, summed
 
 GRID_SCHEMA = "event_type string, v_c long, cnt_t long"
 
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 8
 
-
-class RankTestMonitor:
+class RankTestMonitor(Monitor):
     """Maintains the additive per-type cent-count grid across
     micro-batches; serves both rank tests from one state."""
 
-    def __init__(
-        self,
-        spark,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.grid: DataFrame = spark.createDataFrame([], GRID_SCHEMA)
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    STATE = {"grid": (GRID_SCHEMA, "event_type")}
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         delta = (
             batch_df.select("event_type", rank_cents_col().alias("v_c"))
             .groupBy("event_type", "v_c")
             .agg(F.count(F.lit(1)).alias("cnt_t"))
         )
-        merged = (
-            self.grid.unionByName(delta)
-            .groupBy("event_type", "v_c")
-            .agg(F.sum("cnt_t").alias("cnt_t"))
-        )
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(self.compact_to, "event_type")
-        self.grid = merged.localCheckpoint(eager=True)
-        self.n_batches += 1
+        return {"grid": summed(self.grid, delta, ["event_type", "v_c"])}
 
     def report(self) -> DataFrame:
         """Mann-Whitney table through the SAME serving tail as #178."""
@@ -101,38 +79,3 @@ class RankTestMonitor:
         )
 
         return anova_f_table(bf_sums_from_tgrid(self.grid))
-
-    def erase_users(self, user_ids) -> None:
-        """No-op by construction (the PsiMonitor posture): the grid
-        holds per-(type, cent) aggregate counts with no per-user
-        attribution; erasure happens upstream on the retained log."""
-
-    def save(self, path: str) -> None:
-        """Persist the count grid for driver-restart durability."""
-        self.grid.write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(cls, spark, path: str, **kw) -> "RankTestMonitor":
-        mon = cls(spark, **kw)
-        mon.grid = (
-            spark.read.parquet(path)
-            .select("event_type", "v_c", "cnt_t")
-            .localCheckpoint(eager=True)
-        )
-        return mon
-
-
-def run_ranktest_stream(source: DataFrame, checkpoint: str) -> RankTestMonitor:
-    """Drive a bounded event stream to completion; returns the monitor
-    holding the final count grid."""
-    monitor = RankTestMonitor(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(monitor.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("rank-test stream did not finish within 300s")
-    return monitor

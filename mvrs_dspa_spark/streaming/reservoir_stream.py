@@ -25,6 +25,7 @@ from mvrs_dspa_spark.operators.sampling import (
     reservoir_priorities,
     reservoir_rank,
 )
+from mvrs_dspa_spark.streaming.monitor import Monitor, drop_users
 
 STATE_SCHEMA = (
     "event_id long, user_id long, event_type string, "
@@ -32,15 +33,15 @@ STATE_SCHEMA = (
 )
 
 
-class ReservoirMonitor:
+class ReservoirMonitor(Monitor):
     """Maintains the bottom-k priority rows across micro-batches;
     `report()` serves the ranked sample in the batch query's shape."""
 
+    STATE = {"state": (STATE_SCHEMA, None)}
+
     def __init__(self, spark, k: int = RESERVOIR_K) -> None:
-        self.spark = spark
         self.k = k
-        self.state: DataFrame = spark.createDataFrame([], STATE_SCHEMA)
-        self.n_batches = 0
+        super().__init__(spark)
 
     def _prune(self, df: DataFrame) -> DataFrame:
         w = Window.orderBy("priority", "event_id")
@@ -50,16 +51,12 @@ class ReservoirMonitor:
             .drop("rn")
         )
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         # per-batch prune BEFORE the state union: only a batch's own
         # bottom-k can enter the merged bottom-k (k-row state either
         # way; the prune keeps the union 2k rows, not state+batch)
         delta = self._prune(reservoir_priorities(batch_df))
-        merged = self._prune(self.state.unionByName(delta))
-        self.state = merged.localCheckpoint(eager=True)
-        self.n_batches += 1
+        return {"state": self._prune(self.state.unionByName(delta))}
 
     def report(self) -> DataFrame:
         """The ranked sample through the SAME serving tail as #113."""
@@ -70,45 +67,4 @@ class ReservoirMonitor:
         same documented sense as ThetaMonitor — evicted ranks are not
         refilled from rows already discarded, so the sample shrinks
         below k until natural re-insertion (pytest-pinned)."""
-        ids = [int(u) for u in user_ids]
-        if not ids:
-            return
-        gone = self.spark.createDataFrame(
-            [(u,) for u in ids], "gone long"
-        )
-        self.state = self.state.join(
-            gone, self.state["user_id"] == gone["gone"], "left_anti"
-        ).localCheckpoint(eager=True)
-
-    def save(self, path: str) -> None:
-        """Persist the k-row sample state for driver-restart
-        durability (see PsiMonitor.save)."""
-        self.state.write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(cls, spark, path: str, **kw) -> "ReservoirMonitor":
-        mon = cls(spark, **kw)
-        mon.state = (
-            spark.read.parquet(path)
-            .select(
-                "event_id", "user_id", "event_type", "value", "priority"
-            )
-            .localCheckpoint(eager=True)
-        )
-        return mon
-
-
-def run_reservoir_stream(source: DataFrame, checkpoint: str) -> ReservoirMonitor:
-    """Drive a bounded event stream to completion; returns the monitor
-    holding the final bottom-k sample state."""
-    monitor = ReservoirMonitor(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(monitor.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("reservoir stream did not finish within 300s")
-    return monitor
+        self.state = drop_users(self.state, user_ids)

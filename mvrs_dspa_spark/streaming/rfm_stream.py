@@ -4,8 +4,10 @@
 The batch RFM query needs three per-user aggregates — last-activity
 MAX, event COUNT, value SUM — all decomposable, so a micro-batch
 stream maintains them incrementally: per batch, aggregate the batch
-(map-side partial), full-outer-merge into the running per-user stats
-table (max / + / +), lineage-cut with localCheckpoint. The
+(map-side partial), union-merge it into the running per-user stats
+table (max / sum / sum, the batch query's own aggregates, so a
+NULL-user row merges across batches as it groups in batch),
+lineage-cut with localCheckpoint. The
 quintile-edge scoring that turns stats into (r, f, m) scores is the
 SAME shared function the registered batch query calls
 (`rfm_scores_from_stats`), re-run on demand over the bounded stats
@@ -25,94 +27,40 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mvrs_dspa_spark.streaming.monitor import Monitor, drop_users, summed
+
 STATS_SCHEMA = (
     "user_id long, last_us long, frequency long, monetary_sum double"
 )
 
-# same hygiene as the SCD2 maintainer: compact the running stats table
-# when batch-over-batch unions splinter its partitioning
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 16
 
-
-class RfmMaintainer:
+class RfmMaintainer(Monitor):
     """Accumulates per-user RFM sufficient statistics across
     micro-batches; `segments()` serves the scored table."""
 
-    def __init__(
-        self,
-        spark,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.stats: DataFrame = spark.createDataFrame([], STATS_SCHEMA)
-        self.n_batches = 0
-        self.n_compactions = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    STATE = {"stats": (STATS_SCHEMA, "user_id")}
+    COMPACT_TO = 16
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         delta = batch_df.groupBy("user_id").agg(
-            F.max(F.unix_micros("ts")).alias("d_last"),
-            F.count(F.lit(1)).alias("d_freq"),
-            F.sum("value").alias("d_mon"),
+            F.max(F.unix_micros("ts")).alias("last_us"),
+            F.count(F.lit(1)).alias("frequency"),
+            F.sum("value").alias("monetary_sum"),
         )
-        merged = (
-            self.stats.join(delta, "user_id", "full_outer")
-            .select(
-                "user_id",
-                F.greatest(
-                    F.coalesce("last_us", F.lit(-(1 << 62))),
-                    F.coalesce("d_last", F.lit(-(1 << 62))),
-                ).alias("last_us"),
-                (
-                    F.coalesce("frequency", F.lit(0))
-                    + F.coalesce("d_freq", F.lit(0))
-                ).alias("frequency"),
-                (
-                    F.coalesce("monetary_sum", F.lit(0.0))
-                    + F.coalesce("d_mon", F.lit(0.0))
-                ).alias("monetary_sum"),
+        return {
+            "stats": summed(
+                self.stats, delta, ["user_id"], maxed=("last_us",)
             )
-        )
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(self.compact_to, "user_id")
-            self.n_compactions += 1
-        self.stats = merged.localCheckpoint(eager=True)
-        self.n_batches += 1
+        }
 
     def erase_users(self, user_ids) -> None:
         """GDPR erasure for the streaming stats table (see
         `scd2_stream.Scd2Maintainer.erase_users`): the subject's
         sufficient statistics vanish; if they reappear, recency/
         frequency/monetary accumulate from zero."""
-        ids = list(user_ids)
-        self.stats = self.stats.where(
-            # NULL-safe: ~isin() is NULL for a NULL key, which would
-            # silently erase all null-keyed state too (ADVICE r6)
-            ~F.col("user_id").isin(ids) | F.col("user_id").isNull()
-        ).localCheckpoint(eager=True)
+        self.stats = drop_users(self.stats, user_ids)
 
     def segments(self) -> DataFrame:
         from mvrs_dspa_spark.plans.analytics import rfm_scores_from_stats
 
         return rfm_scores_from_stats(self.stats)
-
-
-def run_rfm_stream(source: DataFrame, checkpoint: str) -> RfmMaintainer:
-    """Drive a bounded event stream to completion; returns the
-    maintainer holding the final per-user stats."""
-    maintainer = RfmMaintainer(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(maintainer.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("rfm stream did not finish within 300s")
-    return maintainer

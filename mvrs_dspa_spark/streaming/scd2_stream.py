@@ -24,43 +24,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mvrs_dspa_spark.streaming.monitor import Monitor, drop_users
+
 HISTORY_SCHEMA = (
     "user_id long, state string, valid_from timestamp, "
     "valid_to timestamp, is_current boolean, version long"
 )
 
-# Long-run hygiene: every batch unions (untouched ∪ recomputed), so the
-# checkpointed history's partition count grows by ~shuffle_partitions
-# per batch — after thousands of batches the dimension would be carved
-# into thousands of splinter partitions (per-task overhead dominates,
-# the exact small-file problem OPTIMIZE fixes on disk). When the count
-# crosses the cap, compact back to `compact_to` partitions hashed on
-# user_id BEFORE the checkpoint, so the next batch's per-user joins
-# start from a sane layout. Amortized cost: one bounded-table shuffle
-# every ~cap/shuffle_partitions batches.
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 16
 
-
-class Scd2Maintainer:
+class Scd2Maintainer(Monitor):
     """Accumulates the SCD2 history across micro-batches."""
 
-    def __init__(
-        self,
-        spark,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.history: DataFrame = spark.createDataFrame([], HISTORY_SCHEMA)
-        self.n_batches = 0
-        self.n_compactions = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    # every batch unions (untouched ∪ recomputed), so the history's
+    # partition count grows by ~shuffle_partitions per batch; compact
+    # on user_id so the next batch's per-user joins start from a sane
+    # layout
+    STATE = {"history": (HISTORY_SCHEMA, "user_id")}
+    COMPACT_TO = 16
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         affected = batch_df.select("user_id").distinct()
 
         # seed: each affected user's open row, replayed ahead of the
@@ -126,12 +108,7 @@ class Scd2Maintainer:
                 ~F.col("is_current")
             )
         )
-        new_hist = untouched.unionByName(recomputed)
-        if new_hist.rdd.getNumPartitions() > self.compact_cap:
-            new_hist = new_hist.repartition(self.compact_to, "user_id")
-            self.n_compactions += 1
-        self.history = new_hist.localCheckpoint(eager=True)
-        self.n_batches += 1
+        return {"history": untouched.unionByName(recomputed)}
 
     def erase_users(self, user_ids) -> None:
         """GDPR right-to-be-forgotten enforcement for STREAMING state
@@ -144,25 +121,5 @@ class Scd2Maintainer:
         semantics the regulation requires. The filter is a broadcast
         NOT-IN over the (small) request list; at cluster scale the
         same contract is a MERGE DELETE on the dimension table."""
-        ids = list(user_ids)
-        self.history = self.history.where(
-            # NULL-safe: ~isin() is NULL for a NULL key, which would
-            # silently erase all null-keyed state too (ADVICE r6)
-            ~F.col("user_id").isin(ids) | F.col("user_id").isNull()
-        ).localCheckpoint(eager=True)
+        self.history = drop_users(self.history, user_ids)
 
-
-def run_scd2_stream(source: DataFrame, checkpoint: str) -> Scd2Maintainer:
-    """Drive a bounded event stream to completion; returns the
-    maintainer holding the final SCD2 history."""
-    maintainer = Scd2Maintainer(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(maintainer.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("scd2 stream did not finish within 300s")
-    return maintainer

@@ -33,57 +33,29 @@ from mvrs_dspa_spark.plans.analytics4 import (
     sprt_decision_table,
     sprt_success_col,
 )
+from mvrs_dspa_spark.streaming.monitor import Monitor, summed
 
 DAILY_SCHEMA = "day long, n_trials long, n_success long"
 
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 8
 
-
-class SprtMonitor:
+class SprtMonitor(Monitor):
     """Accumulates the treatment arm's daily Bernoulli counts across
     micro-batches; `report()` serves the cumulative-LLR decision
     table in the batch query's exact shape."""
 
-    def __init__(
-        self,
-        spark,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.daily: DataFrame = spark.createDataFrame([], DAILY_SCHEMA)
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    STATE = {"daily": (DAILY_SCHEMA, "day")}
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         delta = (
             batch_df.where(sprt_arm_filter())
             .select(sprt_day_col(), sprt_success_col())
             .groupBy("day")
             .agg(
-                F.count(F.lit(1)).alias("d_trials"),
-                F.sum("success").alias("d_success"),
+                F.count(F.lit(1)).alias("n_trials"),
+                F.sum("success").alias("n_success"),
             )
         )
-        merged = self.daily.join(delta, "day", "full_outer").select(
-            "day",
-            (
-                F.coalesce("n_trials", F.lit(0))
-                + F.coalesce("d_trials", F.lit(0))
-            ).alias("n_trials"),
-            (
-                F.coalesce("n_success", F.lit(0))
-                + F.coalesce("d_success", F.lit(0))
-            ).alias("n_success"),
-        )
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(self.compact_to, "day")
-        self.daily = merged.localCheckpoint(eager=True)
-        self.n_batches += 1
+        return {"daily": summed(self.daily, delta, ["day"])}
 
     def report(self) -> DataFrame:
         """The registered batch query's exact output shape, served
@@ -98,19 +70,3 @@ class SprtMonitor:
         latest cumulative row carries the live state)."""
         rows = self.report().collect()
         return rows[-1].decision if rows else "continue"
-
-
-def run_sprt_stream(source: DataFrame, checkpoint: str) -> SprtMonitor:
-    """Drive a bounded event stream to completion; returns the
-    monitor holding the final daily grid."""
-    monitor = SprtMonitor(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(monitor.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("sprt stream did not finish within 300s")
-    return monitor

@@ -23,91 +23,28 @@ from pyspark.sql import functions as F
 
 from mvrs_dspa_spark.operators.sketches import tdigest_from_grid
 from mvrs_dspa_spark.plans.analytics4 import w1_cents_col
+from mvrs_dspa_spark.streaming.monitor import Monitor, summed
 
 GRID_SCHEMA = "event_type string, cents long, cnt long"
 
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 8
 
-
-class TDigestMonitor:
+class TDigestMonitor(Monitor):
     """Accumulates the (type, cents) count grid across micro-batches;
     `report()` serves the quantile table in the batch query's exact
     shape."""
 
-    def __init__(
-        self,
-        spark,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.grid: DataFrame = spark.createDataFrame([], GRID_SCHEMA)
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    STATE = {"grid": (GRID_SCHEMA, "event_type")}
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         delta = (
             batch_df.select("event_type", w1_cents_col().alias("cents"))
             .groupBy("event_type", "cents")
-            .agg(F.count(F.lit(1)).alias("d"))
+            .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        merged = self.grid.join(
-            delta, ["event_type", "cents"], "full_outer"
-        ).select(
-            "event_type",
-            "cents",
-            (F.coalesce("cnt", F.lit(0)) + F.coalesce("d", F.lit(0))).alias(
-                "cnt"
-            ),
-        )
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(self.compact_to, "event_type")
-        self.grid = merged.localCheckpoint(eager=True)
-        self.n_batches += 1
+        return {"grid": summed(self.grid, delta, ["event_type", "cents"])}
 
     def report(self) -> DataFrame:
         """Per-type quantile table through the SAME serving tail the
         batch query uses, from the maintained value-domain-bounded
         grid."""
         return tdigest_from_grid(self.grid)
-
-    def erase_users(self, user_ids) -> None:
-        """GDPR hook parity (see `scd2_stream.Scd2Maintainer`): the
-        grid keys on (type, cents) only — no per-user state, erasure
-        is a documented no-op (the PsiMonitor posture)."""
-        return None
-
-    def save(self, path: str) -> None:
-        """Persist the grid for driver-restart durability (see
-        PsiMonitor.save)."""
-        self.grid.write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(cls, spark, path: str, **kw) -> "TDigestMonitor":
-        mon = cls(spark, **kw)
-        mon.grid = (
-            spark.read.parquet(path)
-            .select("event_type", "cents", "cnt")
-            .localCheckpoint(eager=True)
-        )
-        return mon
-
-
-def run_tdigest_stream(source: DataFrame, checkpoint: str) -> TDigestMonitor:
-    """Drive a bounded event stream to completion; returns the monitor
-    holding the final count grid."""
-    monitor = TDigestMonitor(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(monitor.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("tdigest stream did not finish within 300s")
-    return monitor

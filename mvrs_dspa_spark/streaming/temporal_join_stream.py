@@ -27,9 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mvrs_dspa_spark.streaming.monitor import Monitor, drop_users
 from mvrs_dspa_spark.streaming.scd2_stream import (
-    COMPACT_PARTITION_CAP,
-    COMPACT_TO,
+    HISTORY_SCHEMA,
     Scd2Maintainer,
 )
 
@@ -39,32 +39,33 @@ ENRICHED_SCHEMA = (
 )
 
 
-class TemporalJoinMaintainer:
+class TemporalJoinMaintainer(Monitor):
     """Maintains the SCD2 dimension AND the temporally-enriched event
     ledger across micro-batches."""
 
-    def __init__(
-        self,
-        spark,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.scd2 = Scd2Maintainer(
-            spark, compact_cap=compact_cap, compact_to=compact_to
-        )
-        self.enriched: DataFrame = spark.createDataFrame(
-            [], ENRICHED_SCHEMA
-        )
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    # `history` is the nested SCD2 dimension's frame (the property
+    # below), declared here so save/load carry it with the ledger
+    STATE = {
+        "history": (HISTORY_SCHEMA, "user_id"),
+        "enriched": (ENRICHED_SCHEMA, "user_id"),
+    }
+    COMPACT_TO = 16
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        self.scd2.update(batch_df, batch_id)
-        hist = self.scd2.history.select(
+    def __init__(self, spark) -> None:
+        self.scd2 = Scd2Maintainer(spark)
+        super().__init__(spark)
+
+    @property
+    def history(self) -> DataFrame:
+        return self.scd2.history
+
+    @history.setter
+    def history(self, frame: DataFrame) -> None:
+        self.scd2.history = frame
+
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
+        self.scd2.update(batch_df, self.n_batches)
+        hist = self.history.select(
             F.col("user_id").alias("h_user_id"),
             F.col("state").alias("prior_state"),
             "valid_from",
@@ -92,11 +93,7 @@ class TemporalJoinMaintainer:
                 ),
             )
         )
-        new_ledger = self.enriched.unionByName(enriched)
-        if new_ledger.rdd.getNumPartitions() > self.compact_cap:
-            new_ledger = new_ledger.repartition(self.compact_to, "user_id")
-        self.enriched = new_ledger.localCheckpoint(eager=True)
-        self.n_batches += 1
+        return {"enriched": self.enriched.unionByName(enriched)}
 
     def erase_users(self, user_ids) -> None:
         """GDPR erasure across BOTH maintained states: the SCD2
@@ -104,11 +101,7 @@ class TemporalJoinMaintainer:
         subjects (see `scd2_stream.Scd2Maintainer.erase_users`)."""
         ids = list(user_ids)
         self.scd2.erase_users(ids)
-        self.enriched = self.enriched.where(
-            # NULL-safe: ~isin() is NULL for a NULL key, which would
-            # silently erase all null-keyed state too (ADVICE r6)
-            ~F.col("user_id").isin(ids) | F.col("user_id").isNull()
-        ).localCheckpoint(eager=True)
+        self.enriched = drop_users(self.enriched, ids)
 
     def rollup(self) -> DataFrame:
         """The (prior_state x event_type) summary in the batch
@@ -122,21 +115,3 @@ class TemporalJoinMaintainer:
             )
             .orderBy("prior_state", "event_type")
         )
-
-
-def run_temporal_join_stream(
-    source: DataFrame, checkpoint: str
-) -> TemporalJoinMaintainer:
-    """Drive a bounded event stream to completion; returns the
-    maintainer holding the enriched ledger + SCD2 history."""
-    maintainer = TemporalJoinMaintainer(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(maintainer.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("temporal join stream did not finish within 300s")
-    return maintainer

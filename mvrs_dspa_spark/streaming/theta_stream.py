@@ -31,33 +31,19 @@ from mvrs_dspa_spark.operators.sketches import (
     theta_code_col,
     theta_sketch_table,
 )
+from mvrs_dspa_spark.streaming.monitor import Monitor
 
 STATE_SCHEMA = "event_type string, code long"
 
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 8
 
-
-class ThetaMonitor:
+class ThetaMonitor(Monitor):
     """Maintains the k smallest distinct codes per event type across
     micro-batches; `report()` serves the sketch table in the batch
     query's shape (sans the exact-count audit columns)."""
 
-    def __init__(
-        self,
-        spark,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.state: DataFrame = spark.createDataFrame([], STATE_SCHEMA)
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    STATE = {"state": (STATE_SCHEMA, "event_type")}
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         w = Window.partitionBy("event_type").orderBy("code")
         delta = (
             batch_df.select(
@@ -77,10 +63,7 @@ class ThetaMonitor:
             .where(F.col("rn") <= THETA_K)
             .drop("rn")
         )
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(self.compact_to, "event_type")
-        self.state = merged.localCheckpoint(eager=True)
-        self.n_batches += 1
+        return {"state": merged}
 
     def report(self) -> DataFrame:
         """Per-type + '__union__' sketch rows through the SAME serving
@@ -88,13 +71,12 @@ class ThetaMonitor:
         return theta_sketch_table(self.state, exact=False)
 
     def erase_users(self, user_ids) -> None:
-        """GDPR erasure (see `scd2_stream.Scd2Maintainer.erase_users`):
-        the state IS per-user (one hash code per retained user), and
-        the affine hash is invertible-free forward-computable — drop
-        the subjects' codes. The estimate then reflects the corpus
-        without them (KMV deletion is lossy: evicted ranks are not
-        refilled, matching a re-scan only after natural re-insertion —
-        documented semantics, pytest-pinned)."""
+        """GDPR erasure: the state IS per-user (one hash code per
+        retained user), and the affine hash is invertible-free
+        forward-computable — drop the subjects' codes. The estimate
+        then reflects the corpus without them (KMV deletion is lossy:
+        evicted ranks are not refilled, matching a re-scan only after
+        natural re-insertion — documented semantics, pytest-pinned)."""
         ids = [int(u) for u in user_ids]
         if not ids:
             return
@@ -106,34 +88,3 @@ class ThetaMonitor:
                 codes, self.state["code"] == codes["gone"], "left_anti"
             ).localCheckpoint(eager=True)
         )
-
-    def save(self, path: str) -> None:
-        """Persist the k-per-type code state for driver-restart
-        durability (see PsiMonitor.save)."""
-        self.state.write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(cls, spark, path: str, **kw) -> "ThetaMonitor":
-        mon = cls(spark, **kw)
-        mon.state = (
-            spark.read.parquet(path)
-            .select("event_type", "code")
-            .localCheckpoint(eager=True)
-        )
-        return mon
-
-
-def run_theta_stream(source: DataFrame, checkpoint: str) -> ThetaMonitor:
-    """Drive a bounded event stream to completion; returns the monitor
-    holding the final k-per-type code state."""
-    monitor = ThetaMonitor(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(monitor.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("theta stream did not finish within 300s")
-    return monitor

@@ -24,35 +24,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mvrs_dspa_spark.plans.analytics4 import w1_cents_col, w1_from_cells
+from mvrs_dspa_spark.streaming.monitor import Monitor, summed
 
 GRID_SCHEMA = "event_type string, cents long, c1 long, c2 long"
 
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 8
 
-
-class WassersteinMonitor:
+class WassersteinMonitor(Monitor):
     """Accumulates the (type, cents) reference/current count grid
     across micro-batches; `report()` serves the W1 table in the batch
     query's exact shape."""
 
-    def __init__(
-        self,
-        spark,
-        split_us: int,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.split_us = int(split_us)
-        self.grid: DataFrame = spark.createDataFrame([], GRID_SCHEMA)
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    STATE = {"grid": (GRID_SCHEMA, "event_type")}
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def __init__(self, spark, split_us: int) -> None:
+        self.split_us = int(split_us)
+        super().__init__(spark)
+
+    def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         is_ref = F.unix_micros("ts") < F.lit(self.split_us)
         delta = (
             batch_df.select(
@@ -62,26 +50,11 @@ class WassersteinMonitor:
             )
             .groupBy("event_type", "cents")
             .agg(
-                F.sum(F.when(F.col("ref"), 1).otherwise(0)).alias("d1"),
-                F.sum(F.when(~F.col("ref"), 1).otherwise(0)).alias("d2"),
+                F.sum(F.when(F.col("ref"), 1).otherwise(0)).alias("c1"),
+                F.sum(F.when(~F.col("ref"), 1).otherwise(0)).alias("c2"),
             )
         )
-        merged = self.grid.join(
-            delta, ["event_type", "cents"], "full_outer"
-        ).select(
-            "event_type",
-            "cents",
-            (F.coalesce("c1", F.lit(0)) + F.coalesce("d1", F.lit(0))).alias(
-                "c1"
-            ),
-            (F.coalesce("c2", F.lit(0)) + F.coalesce("d2", F.lit(0))).alias(
-                "c2"
-            ),
-        )
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(self.compact_to, "event_type")
-        self.grid = merged.localCheckpoint(eager=True)
-        self.n_batches += 1
+        return {"grid": summed(self.grid, delta, ["event_type", "cents"])}
 
     def report(self) -> DataFrame:
         """W1 per event type through the SAME serving tail the batch
@@ -106,44 +79,3 @@ class WassersteinMonitor:
         from mvrs_dspa_spark.plans.analytics4 import divergences_from_cells
 
         return divergences_from_cells(self.grid)
-
-    def erase_users(self, user_ids) -> None:
-        """GDPR hook parity (see `scd2_stream.Scd2Maintainer`): the
-        grid keys on (type, cents) only — no per-user state, erasure
-        is a documented no-op (the PsiMonitor posture)."""
-        return None
-
-    def save(self, path: str) -> None:
-        """Persist the grid for driver-restart durability (see
-        PsiMonitor.save)."""
-        self.grid.write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(
-        cls, spark, split_us: int, path: str, **kw
-    ) -> "WassersteinMonitor":
-        mon = cls(spark, split_us, **kw)
-        mon.grid = (
-            spark.read.parquet(path)
-            .select("event_type", "cents", "c1", "c2")
-            .localCheckpoint(eager=True)
-        )
-        return mon
-
-
-def run_wasserstein_stream(
-    source: DataFrame, checkpoint: str, split_us: int
-) -> WassersteinMonitor:
-    """Drive a bounded event stream to completion; returns the monitor
-    holding the final count grid."""
-    monitor = WassersteinMonitor(source.sparkSession, split_us)
-    q = (
-        source.writeStream.foreachBatch(monitor.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("wasserstein stream did not finish within 300s")
-    return monitor

@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 from mvrs_dspa_spark.operators.mlmodels import _gramian, _solve_side
 from mvrs_dspa_spark.streaming.als_stream import (
     AlsFoldInServer,
-    run_als_fold_in,
 )
+from mvrs_dspa_spark.streaming.monitor import drain
 from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
     write_replay_batches,
@@ -97,7 +97,8 @@ def test_fold_in_via_stream_and_serving(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(inter_ev, replay_dir, n_batches=3)
     src = read_replay_stream(spark, replay_dir, inter_ev.schema)
-    server = run_als_fold_in(src, items, str(tmp_path / "ckpt"))
+    server = AlsFoldInServer(src.sparkSession, items)
+    drain(src, str(tmp_path / "ckpt"), server.update)
     assert server.n_batches >= 1
 
     recs = server.recommend(n=3).collect()
@@ -129,3 +130,18 @@ def test_fold_in_only_resolves_touched_users(spark):
     after = {r.custkey: tuple(r.fac) for r in server.factors.collect()}
     for u, fac in before.items():
         assert after[u] == fac, f"untouched user {u} was re-solved differently"
+
+
+def test_fold_in_erasure_drops_customer(spark):
+    """The fold-in state is per customer, so erasure drops the
+    customer's interactions and factor vector and nobody else's."""
+    inter_ev = _interactions(spark).orderBy("event_id").limit(100)
+    server = AlsFoldInServer(spark, _frozen_items(spark))
+    server.update(inter_ev, 0)
+    users = sorted(r.custkey for r in server.factors.collect())
+    assert len(users) >= 2
+    server.erase_users([users[0]])
+    for frame in (server.inter, server.factors):
+        left = {r.custkey for r in frame.select("custkey").collect()}
+        assert users[0] not in left
+        assert users[1] in left

@@ -17,8 +17,8 @@ from mvrs_dspa_spark.operators.ann import (
 from mvrs_dspa_spark.operators.clustering import kmeans_fit_exact
 from mvrs_dspa_spark.streaming.ann_maintenance_stream import (
     AnnMaintenanceMonitor,
-    run_ann_maintenance_stream,
 )
+from mvrs_dspa_spark.streaming.monitor import drain
 from mvrs_dspa_spark.streaming.replay import read_replay_stream
 from mvrs_dspa_spark.tables import table
 
@@ -47,9 +47,8 @@ def test_streaming_maintenance_equals_batch(spark, tmp_path):
             .write.parquet(f"{replay_dir}/batch_{b:05d}")
         )
     src = read_replay_stream(spark, replay_dir, emb.schema)
-    mon = run_ann_maintenance_stream(
-        src, str(tmp_path / "ckpt"), _trained_cents(spark)
-    )
+    mon = AnnMaintenanceMonitor(src.sparkSession, _trained_cents(spark))
+    drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
     # state bounded by nlist x 2 rows regardless of ingest volume
     assert mon.state.count() <= IVF_NLIST * 2

@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 from mvrs_dspa_spark.operators.retrieval import bm25_search
 from mvrs_dspa_spark.streaming.bm25_stream import (
     Bm25IndexMaintainer,
-    run_bm25_stream,
 )
+from mvrs_dspa_spark.streaming.monitor import drain
 from mvrs_dspa_spark.tables import table
 
 SF = "/root/testdata/sf0.001"
@@ -40,7 +40,8 @@ def test_streaming_bm25_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{replay}/batch_*")
     )
-    mon = run_bm25_stream(src, str(tmp_path / "ckpt"))
+    mon = Bm25IndexMaintainer(src.sparkSession)
+    drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
     got = sorted(tuple(r) for r in mon.report().collect())
     assert len(got) > 0

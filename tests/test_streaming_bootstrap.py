@@ -9,8 +9,8 @@ from pyspark.sql import functions as F
 from mvrs_dspa_spark.plans.analytics5 import bootstrap_mean_ci
 from mvrs_dspa_spark.streaming.bootstrap_stream import (
     BootstrapMonitor,
-    run_bootstrap_stream,
 )
+from mvrs_dspa_spark.streaming.monitor import drain
 from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
     write_replay_batches,
@@ -29,7 +29,8 @@ def test_streaming_bootstrap_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_bootstrap_stream(src, str(tmp_path / "ckpt"))
+    mon = BootstrapMonitor(src.sparkSession)
+    drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
     # state bounded at B x types rows no matter the volume
     from mvrs_dspa_spark.plans.analytics5 import BOOT_B

@@ -9,8 +9,8 @@ from pyspark.sql import functions as F
 from mvrs_dspa_spark.plans.analytics5 import user_capture_recapture
 from mvrs_dspa_spark.streaming.capture_stream import (
     CaptureMonitor,
-    run_capture_stream,
 )
+from mvrs_dspa_spark.streaming.monitor import drain
 from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
     write_replay_batches,
@@ -37,7 +37,8 @@ def test_streaming_capture_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_capture_stream(src, str(tmp_path / "ckpt"), _split_us(ev))
+    mon = CaptureMonitor(src.sparkSession, _split_us(ev))
+    drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
     # state is user-dimension-bounded: one row per observed user
     assert (
@@ -75,5 +76,5 @@ def test_capture_real_erasure(spark, tmp_path):
     assert after.n_observed == before.n_observed - len(victims)
     # restart durability preserves the erased state
     m.save(str(tmp_path / "state"))
-    m2 = CaptureMonitor.load(spark, split, str(tmp_path / "state"))
+    m2 = CaptureMonitor.load(spark, str(tmp_path / "state"), split)
     assert _rows(m2.report()) == _rows(m.report())

@@ -9,8 +9,8 @@ from pyspark.sql import functions as F
 from mvrs_dspa_spark.plans.analytics import hourly_changepoint_cusum
 from mvrs_dspa_spark.streaming.cusum_stream import (
     CusumMonitor,
-    run_cusum_stream,
 )
+from mvrs_dspa_spark.streaming.monitor import drain
 from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
     write_replay_batches,
@@ -29,7 +29,8 @@ def test_streaming_cusum_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_cusum_stream(src, str(tmp_path / "ckpt"))
+    mon = CusumMonitor(src.sparkSession)
+    drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
     # state is the hourly grid: one row per (type, hour) cell
     cells = mon.state.groupBy("event_type", "hour").count().collect()

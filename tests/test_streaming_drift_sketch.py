@@ -14,18 +14,17 @@ from mvrs_dspa_spark.operators.sketches import (
     theta_sketch_distinct_union,
 )
 from mvrs_dspa_spark.plans.analytics import value_drift_psi
-from mvrs_dspa_spark.streaming.psi_stream import PsiMonitor, run_psi_stream
+from mvrs_dspa_spark.streaming.monitor import drain
+from mvrs_dspa_spark.streaming.psi_stream import PsiMonitor
 from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
     write_replay_batches,
 )
 from mvrs_dspa_spark.streaming.tdigest_stream import (
     TDigestMonitor,
-    run_tdigest_stream,
 )
 from mvrs_dspa_spark.streaming.theta_stream import (
     ThetaMonitor,
-    run_theta_stream,
 )
 from mvrs_dspa_spark.tables import table
 
@@ -45,9 +44,8 @@ def test_streaming_psi_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_psi_stream(
-        src, str(tmp_path / "ckpt"), _halfway_split_us(ev)
-    )
+    mon = PsiMonitor(src.sparkSession, _halfway_split_us(ev))
+    drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
 
     want = sorted(
@@ -69,7 +67,8 @@ def test_streaming_theta_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_theta_stream(src, str(tmp_path / "ckpt"))
+    mon = ThetaMonitor(src.sparkSession)
+    drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
 
     # bounded state: never more than k codes per (type + union... the
@@ -123,16 +122,14 @@ def test_streaming_wasserstein_equals_batch(spark, tmp_path):
     from mvrs_dspa_spark.plans.analytics4 import value_wasserstein_drift
     from mvrs_dspa_spark.streaming.wasserstein_stream import (
         WassersteinMonitor,
-        run_wasserstein_stream,
     )
 
     ev = table(spark, SF, "events")
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_wasserstein_stream(
-        src, str(tmp_path / "ckpt"), _halfway_split_us(ev)
-    )
+    mon = WassersteinMonitor(src.sparkSession, _halfway_split_us(ev))
+    drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
 
     cols = ("event_type", "n_first_half", "n_second_half", "wasserstein_1")
@@ -229,10 +226,10 @@ def test_monitor_save_load_restart_equals_uninterrupted(spark, tmp_path):
 
     cases = (
         (PsiMonitor, {"split_us": split},
-         lambda cls, p: cls.load(spark, split, p)),
+         lambda cls, p: cls.load(spark, p, split)),
         (ThetaMonitor, {}, lambda cls, p: cls.load(spark, p)),
         (WassersteinMonitor, {"split_us": split},
-         lambda cls, p: cls.load(spark, split, p)),
+         lambda cls, p: cls.load(spark, p, split)),
         (TDigestMonitor, {}, lambda cls, p: cls.load(spark, p)),
     )
     for cls, kw, loader in cases:
@@ -264,7 +261,8 @@ def test_streaming_tdigest_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay_td")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_tdigest_stream(src, str(tmp_path / "ckpt_td"))
+    mon = TDigestMonitor(src.sparkSession)
+    drain(src, str(tmp_path / "ckpt_td"), mon.update)
     assert mon.n_batches >= 4
 
     want = sorted(

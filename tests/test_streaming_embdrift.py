@@ -9,8 +9,8 @@ from pyspark.sql import functions as F
 from mvrs_dspa_spark.operators.embeddings import embedding_centroid_drift
 from mvrs_dspa_spark.streaming.embdrift_stream import (
     EmbeddingDriftMonitor,
-    run_embdrift_stream,
 )
+from mvrs_dspa_spark.streaming.monitor import drain
 from mvrs_dspa_spark.streaming.replay import read_replay_stream
 from mvrs_dspa_spark.tables import table
 
@@ -34,7 +34,8 @@ def test_streaming_embdrift_equals_batch(spark, tmp_path):
             .write.parquet(f"{replay_dir}/batch_{b:05d}")
         )
     src = read_replay_stream(spark, replay_dir, emb.schema)
-    mon = run_embdrift_stream(src, str(tmp_path / "ckpt"))
+    mon = EmbeddingDriftMonitor(src.sparkSession)
+    drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
     # state bounded by labels x 2 x dims, one row per cell
     dims = mon.state.select("dim").distinct().count()

@@ -8,8 +8,8 @@ from __future__ import annotations
 from mvrs_dspa_spark.plans.analytics2 import dau_wau_stickiness
 from mvrs_dspa_spark.streaming.engagement_stream import (
     EngagementMaintainer,
-    run_engagement_stream,
 )
+from mvrs_dspa_spark.streaming.monitor import drain
 from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
     write_replay_batches,
@@ -30,7 +30,8 @@ def test_streaming_engagement_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_engagement_stream(src, str(tmp_path / "ckpt"))
+    mon = EngagementMaintainer(src.sparkSession)
+    drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
 
     want = _rows(dau_wau_stickiness(spark, SF))

@@ -7,7 +7,12 @@ from __future__ import annotations
 
 import datetime as dt
 
+from mvrs_dspa_spark.streaming.capture_stream import CaptureMonitor
+from mvrs_dspa_spark.streaming.engagement_stream import EngagementMaintainer
+from mvrs_dspa_spark.streaming.markov_stream import MarkovMonitor
+from mvrs_dspa_spark.streaming.reservoir_stream import ReservoirMonitor
 from mvrs_dspa_spark.streaming.rfm_stream import RfmMaintainer
+from mvrs_dspa_spark.streaming.scd2_stream import Scd2Maintainer
 from mvrs_dspa_spark.streaming.temporal_join_stream import (
     TemporalJoinMaintainer,
 )
@@ -76,8 +81,8 @@ def test_rfm_stats_erasure_then_restart(spark):
 def test_erasure_spares_null_keyed_state(spark):
     """~isin(ids) evaluates to NULL for a NULL key, which silently
     deleted all null-keyed state alongside the requested subjects
-    (ADVICE r6): erasure must touch ONLY the named users."""
-    m = RfmMaintainer(spark)
+    (ADVICE r6): erasure must touch ONLY the named users — in every
+    monitor that holds per-user rows."""
     rows = [
         (0, _BASE, 1, "purchase", 10.0),
         (1, _BASE, 2, "purchase", 20.0),
@@ -90,9 +95,39 @@ def test_erasure_spares_null_keyed_state(spark):
         ],
         SCHEMA,
     )
-    m.update(batch, 0)
-    m.erase_users([1])
-    left = {r.user_id for r in m.stats.select("user_id").collect()}
-    assert 1 not in left
-    assert 2 in left
-    assert None in left, "null-keyed state must survive a targeted erase"
+    cases = (
+        (RfmMaintainer(spark), ("stats",)),
+        (EngagementMaintainer(spark), ("pairs",)),
+        (Scd2Maintainer(spark), ("history",)),
+        (TemporalJoinMaintainer(spark), ("history", "enriched")),
+        (CaptureMonitor(spark, 0), ("state",)),
+        (ReservoirMonitor(spark), ("state",)),
+        (MarkovMonitor(spark), ("last",)),
+    )
+    for m, frames in cases:
+        m.update(batch, 0)
+        m.erase_users([1])
+        for attr in frames:
+            name = f"{type(m).__name__}.{attr}"
+            left = {
+                r.user_id
+                for r in getattr(m, attr).select("user_id").collect()
+            }
+            assert 1 not in left, name
+            assert 2 in left, name
+            assert None in left, (
+                f"{name}: null-keyed state must survive a targeted erase"
+            )
+
+
+def test_null_keyed_user_merges_across_batches(spark):
+    """A full-outer join never matches NULL keys, so merging the
+    per-user stats that way kept one NULL-user row per batch; the
+    batch `user_rfm_segments` groups that user into one row."""
+    m = RfmMaintainer(spark)
+    m.update(_batch(spark, [(0, None, "view", 2.0)]), 0)
+    m.update(_batch(spark, [(5, None, "click", 3.0)]), 1)
+    rows = m.stats.where("user_id IS NULL").collect()
+    assert len(rows) == 1
+    assert rows[0].frequency == 2
+    assert rows[0].monetary_sum == 5.0

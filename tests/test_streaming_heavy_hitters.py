@@ -13,8 +13,9 @@ from pyspark.sql import functions as F
 from mvrs_dspa_spark.functions import text as T
 from mvrs_dspa_spark.operators import sketches as S
 from mvrs_dspa_spark.streaming.heavy_hitters_stream import (
-    run_heavy_hitter_stream,
+    HeavyHitterMonitor,
 )
+from mvrs_dspa_spark.streaming.monitor import drain
 from mvrs_dspa_spark.tables import table
 
 DOC_SCHEMA = "doc_id long, text string"
@@ -37,7 +38,8 @@ def test_streaming_heavy_hitters_match_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(root, "b*"))
     )
-    mon = run_heavy_hitter_stream(spark, src, str(tmp_path / "ckpt"))
+    mon = HeavyHitterMonitor()
+    drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
 
     # grid == batch sketch cell-for-cell

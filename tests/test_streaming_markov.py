@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 from mvrs_dspa_spark.plans.analytics2 import markov_attribution
 from mvrs_dspa_spark.streaming.markov_stream import (
     MarkovMonitor,
-    run_markov_stream,
 )
+from mvrs_dspa_spark.streaming.monitor import drain
 from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
     write_replay_batches,
@@ -30,7 +30,8 @@ def test_streaming_markov_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_markov_stream(src, str(tmp_path / "ckpt"))
+    mon = MarkovMonitor(src.sparkSession)
+    drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
     # state bounds: grid is domain-bounded, last is user-bounded
     assert mon.grid.count() <= 7 * 7

@@ -10,9 +10,9 @@ from mvrs_dspa_spark.plans.analytics5 import (
     kruskal_wallis_value,
     value_mannwhitney_by_type,
 )
+from mvrs_dspa_spark.streaming.monitor import drain
 from mvrs_dspa_spark.streaming.ranktest_stream import (
     RankTestMonitor,
-    run_ranktest_stream,
 )
 from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
@@ -32,7 +32,8 @@ def test_streaming_ranktests_equal_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_ranktest_stream(src, str(tmp_path / "ckpt"))
+    mon = RankTestMonitor(src.sparkSession)
+    drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
     # one state, FOUR statistics — all equal their batch twins exactly
     assert _rows(mon.report()) == _rows(

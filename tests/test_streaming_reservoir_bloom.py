@@ -14,15 +14,14 @@ from mvrs_dspa_spark.operators.sketches import bloom_membership_report
 from mvrs_dspa_spark.streaming.bloom_stream import (
     BloomMonitor,
     known_filter,
-    run_bloom_stream,
 )
+from mvrs_dspa_spark.streaming.monitor import drain
 from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
     write_replay_batches,
 )
 from mvrs_dspa_spark.streaming.reservoir_stream import (
     ReservoirMonitor,
-    run_reservoir_stream,
 )
 from mvrs_dspa_spark.tables import table
 
@@ -38,7 +37,8 @@ def test_streaming_reservoir_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_reservoir_stream(src, str(tmp_path / "ckpt"))
+    mon = ReservoirMonitor(src.sparkSession)
+    drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
     # bounded state: exactly k rows once volume exceeds k
     assert mon.state.count() == mon.k
@@ -91,7 +91,8 @@ def test_streaming_bloom_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_bloom_stream(src, str(tmp_path / "ckpt"))
+    mon = BloomMonitor(src.sparkSession)
+    drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
 
     batch_row = bloom_membership_report(spark, SF).collect()[0]

@@ -7,11 +7,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from mvrs_dspa_spark.plans.analytics import user_rfm_segments
+from mvrs_dspa_spark.streaming.monitor import drain
 from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
     write_replay_batches,
 )
-from mvrs_dspa_spark.streaming.rfm_stream import RfmMaintainer, run_rfm_stream
+from mvrs_dspa_spark.streaming.rfm_stream import RfmMaintainer
 from mvrs_dspa_spark.tables import table
 
 SF = "/root/testdata/sf0.001"
@@ -37,7 +38,8 @@ def test_streaming_rfm_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_rfm_stream(src, str(tmp_path / "ckpt"))
+    mon = RfmMaintainer(src.sparkSession)
+    drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
 
     want = _rows(user_rfm_segments(spark, SF))
@@ -46,13 +48,15 @@ def test_streaming_rfm_equals_batch(spark, tmp_path):
     assert got == want
 
 
-def test_streaming_rfm_stats_partitions_stay_bounded(spark):
+def test_streaming_rfm_stats_partitions_stay_bounded(spark, monkeypatch):
     ev = table(spark, SF, "events").orderBy("ts", "event_id").limit(400)
     rows = ev.collect()
     # cap=0 forces the compaction path every batch at test scale (AQE
     # coalescing keeps tiny join outputs at 1-2 partitions; at
     # production scale the cap is what bounds them)
-    m = RfmMaintainer(spark, compact_cap=0, compact_to=2)
+    monkeypatch.setattr(RfmMaintainer, "COMPACT_CAP", 0)
+    monkeypatch.setattr(RfmMaintainer, "COMPACT_TO", 2)
+    m = RfmMaintainer(spark)
     step = 40
     for i in range(0, len(rows), step):
         m.update(spark.createDataFrame(rows[i : i + step], ev.schema), i)

@@ -9,11 +9,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from mvrs_dspa_spark.plans.analytics import user_state_history
+from mvrs_dspa_spark.streaming.monitor import drain
 from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
     write_replay_batches,
 )
-from mvrs_dspa_spark.streaming.scd2_stream import run_scd2_stream
+from mvrs_dspa_spark.streaming.scd2_stream import Scd2Maintainer
 from mvrs_dspa_spark.tables import table
 
 SF = "/root/testdata/sf0.001"
@@ -61,7 +62,8 @@ def test_streaming_scd2_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(sliced, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, sliced.schema)
-    mon = run_scd2_stream(src, str(tmp_path / "ckpt"))
+    mon = Scd2Maintainer(src.sparkSession)
+    drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
 
     want = _rows(user_state_history(spark, sliced_dir))
@@ -71,7 +73,9 @@ def test_streaming_scd2_equals_batch(spark, tmp_path):
 
 
 @pytest.mark.slow  # >10 s: slow tier, run with -m slow
-def test_streaming_scd2_history_partitions_stay_bounded(spark, tmp_path):
+def test_streaming_scd2_history_partitions_stay_bounded(
+    spark, tmp_path, monkeypatch
+):
     """Long-run hygiene: each batch unions recomputed rows onto the
     history, which grows the checkpointed partition count without
     bound; the maintainer must compact once the cap is crossed so a
@@ -85,7 +89,9 @@ def test_streaming_scd2_history_partitions_stay_bounded(spark, tmp_path):
     # cap=2 forces the compaction path at test scale (AQE coalescing
     # keeps tiny unions at ~3 partitions; at production scale each
     # union branch is many partitions and the cap is what bounds them)
-    m = Scd2Maintainer(spark, compact_cap=2, compact_to=2)
+    monkeypatch.setattr(Scd2Maintainer, "COMPACT_CAP", 2)
+    monkeypatch.setattr(Scd2Maintainer, "COMPACT_TO", 2)
+    m = Scd2Maintainer(spark)
     step = 30
     for i in range(0, len(rows), step):
         batch = spark.createDataFrame(rows[i : i + step], ev.schema)

@@ -6,13 +6,13 @@ micro-batches (29ae)."""
 from __future__ import annotations
 
 from mvrs_dspa_spark.plans.analytics4 import sequential_ab_sprt
+from mvrs_dspa_spark.streaming.monitor import drain
 from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
     write_replay_batches,
 )
 from mvrs_dspa_spark.streaming.sprt_stream import (
     SprtMonitor,
-    run_sprt_stream,
 )
 from mvrs_dspa_spark.tables import table
 
@@ -31,7 +31,8 @@ def test_streaming_sprt_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_sprt_stream(src, str(tmp_path / "ckpt"))
+    mon = SprtMonitor(src.sparkSession)
+    drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
 
     want = _rows(sequential_ab_sprt(spark, SF))

@@ -9,13 +9,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from mvrs_dspa_spark.plans.analytics2 import point_in_time_state_join
+from mvrs_dspa_spark.streaming.monitor import drain
 from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
     write_replay_batches,
 )
 from mvrs_dspa_spark.streaming.temporal_join_stream import (
     TemporalJoinMaintainer,
-    run_temporal_join_stream,
 )
 from mvrs_dspa_spark.tables import table
 
@@ -34,7 +34,8 @@ def test_streaming_temporal_join_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_temporal_join_stream(src, str(tmp_path / "ckpt"))
+    mon = TemporalJoinMaintainer(src.sparkSession)
+    drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
 
     want = _rows(point_in_time_state_join(spark, SF))
