@@ -218,17 +218,12 @@ INCR_MOD = 4  # doc_id % 4 == 0 -> incoming batch; everything else -> corpus
 # comparing the integer keeps the keep/drop decision engine-exact
 MIN_MATCHES = int(N_HASHES * NEAR_DUP_SIM)
 
-_INCR_BUCKETS_SQL = "\n            UNION ALL ".join(
-    f"SELECT doc_id, {j} AS band, {MH._band_hash_sql(j, N_HASHES // BANDS)} AS bh FROM sig"
-    for j in range(BANDS)
-)
-
 
 @register(
     "dedup_incremental",
     oracle=f"""
         WITH sig AS ({_SIG_SQL}),
-        buckets AS ({_INCR_BUCKETS_SQL}),
+        buckets AS ({MH.bucket_rows_sql("doc_id", N_HASHES, BANDS)}),
         matches AS (
             SELECT a.doc_id AS inc_id, MIN(b.doc_id) AS dup_of
             FROM buckets a
@@ -261,7 +256,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # asymmetric delta-vs-corpus join filters each side differently,
     # so the checkpoint only adds a materialization barrier
     buckets = MH.bucket_rows_from_sig_df(
-        _doc_array_sigs(spark, sf_dir), "sg", N_HASHES, BANDS
+        _doc_array_sigs(spark, sf_dir), N_HASHES, BANDS
     )
     inc = buckets.where(F.col("doc_id") % INCR_MOD == 0).alias("a")
     corp = buckets.where(F.col("doc_id") % INCR_MOD != 0).alias("b")
@@ -1185,7 +1180,7 @@ def minhash_containment_join(
         F.size("sh").cast("long").alias("n"),
         MH.signature_array_col("sh", _PARAMS).alias("sg"),
     )
-    buckets = MH.bucket_rows_from_sig_df(sigs, "sg", N_HASHES, BANDS)
+    buckets = MH.bucket_rows_from_sig_df(sigs, N_HASHES, BANDS)
     if df_cap is not None:
         keep = (
             buckets.groupBy("band", "bh")
@@ -1253,12 +1248,6 @@ def _perc_sql() -> str:
     """Component summaries per threshold off ONE materialized
     signature/candidate pipeline (inlining it per branch cost the
     oracle ~9 signature recomputes, 122 s at sf0.01 -> ~14 s)."""
-    rows = N_HASHES // BANDS
-    bucket_branches = "\n            UNION ALL ".join(
-        f"SELECT doc_id, {j} AS band, {MH._band_hash_sql(j, rows)} AS bh "
-        "FROM sig"
-        for j in range(BANDS)
-    )
     branches = []
     for i, tau in enumerate(_PERC_TAUS):
         branches.append(f"""
@@ -1296,7 +1285,7 @@ def _perc_sql() -> str:
     return f"""
         WITH RECURSIVE
         sig AS MATERIALIZED ({_SIG_SQL}),
-        buckets AS MATERIALIZED ({bucket_branches}),
+        buckets AS MATERIALIZED ({MH.bucket_rows_sql("doc_id", N_HASHES, BANDS)}),
         scored AS MATERIALIZED (
             SELECT c.id_a, c.id_b,
                    {MH.est_similarity_sql(N_HASHES)} AS est

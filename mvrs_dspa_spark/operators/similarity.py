@@ -392,7 +392,9 @@ def similar_users_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     items = _items_df(spark, sf_dir, dedup=False)
     sig = MH.signature_df(items, "user_id", "item", _PARAMS)
     # signatures scored inside the band join (no sig re-join / distinct)
-    scored = MH.scored_candidate_pairs_df(sig, "user_id", N_HASHES, BANDS)
+    scored = MH.scored_candidate_pairs_from_array_sig_df(
+        sig, "user_id", N_HASHES, BANDS
+    )
     # Both directions via ONE explode instead of unionAll of two
     # copies of `scored`: the union form plans (and executes) the
     # whole candidate-join subtree once per branch — with the band

@@ -26,7 +26,7 @@ Ordering semantics: within a micro-batch, docs are processed in
 (ts, doc_id) order; `dup_of` always references a doc earlier in that
 order or from an earlier batch. A doc pair sharing k bands emits its
 match once per shared band (collapse downstream with a groupBy, as
-batch `scored_candidate_pairs_df` does).
+:func:`batch_reference_near_dup` does).
 """
 
 from __future__ import annotations
@@ -207,8 +207,8 @@ def streaming_near_dup(
         F.size("_sh").alias("_n_sh"),
     ).where(F.col("_n_sh") > 0)
     banded = MH.bucket_rows_from_sig_df(
-        sig.select("doc_id", "ts", "sg"), "sg", n_hashes, bands
-    )
+        sig.select("doc_id", "ts", "sg"), n_hashes, bands
+    ).drop("bhs")
     return banded.groupBy("band", "bh").applyInPandasWithState(
         _dedup_fn(n_hashes, threshold, max_bucket_docs, ttl_ms),
         outputStructType=OUTPUT_SCHEMA,
@@ -237,7 +237,7 @@ def batch_reference_near_dup(
         .where(F.size("_sh") > 0)
         .select("doc_id", "ts", MH.signature_array_col("_sh", params).alias("sg"))
     )
-    banded = MH.bucket_rows_from_sig_df(sig, "sg", n_hashes, bands)
+    banded = MH.bucket_rows_from_sig_df(sig, n_hashes, bands)
     a, b = banded.alias("a"), banded.alias("b")
     earlier = (F.col("b.ts") < F.col("a.ts")) | (
         (F.col("b.ts") == F.col("a.ts"))

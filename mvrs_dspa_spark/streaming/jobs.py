@@ -142,12 +142,8 @@ def recommendations_job(
 
         active = new_items.select("user_id").distinct()
         sig = MH.signature_df(items, "user_id", "item", _PARAMS)
-        cand = MH.candidate_pairs_df(sig, "user_id", N_HASHES, BANDS)
-        sa, sb = sig.alias("sa"), sig.alias("sb")
-        scored = (
-            cand.join(sa, F.col("id_a") == F.col("sa.user_id"))
-            .join(sb, F.col("id_b") == F.col("sb.user_id"))
-            .select("id_a", "id_b", MH.est_similarity_expr(N_HASHES).alias("est_sim"))
+        scored = MH.scored_candidate_pairs_from_array_sig_df(
+            sig, "user_id", N_HASHES, BANDS
         )
         both = scored.select(
             F.col("id_a").alias("user_id"), F.col("id_b").alias("rec_user_id"), "est_sim"

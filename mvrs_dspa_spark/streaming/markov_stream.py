@@ -84,9 +84,11 @@ class MarkovMonitor(Monitor):
         firsts = steps.where(F.col("pos") == 1).select(
             "user_id", F.col("event_type").alias("ftype")
         )
+        carried = self.last.select(F.col("user_id").alias("_uid"), "last_type")
         boundary = (
+            # NULL-safe: a NULL user's journey continues like any other's
             firsts.join(
-                self.last.select("user_id", "last_type"), "user_id", "left"
+                carried, F.col("user_id").eqNullSafe(F.col("_uid")), "left"
             )
             .where(
                 F.col("last_type").isNull()

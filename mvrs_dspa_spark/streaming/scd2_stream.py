@@ -43,13 +43,14 @@ class Scd2Maintainer(Monitor):
     COMPACT_TO = 16
 
     def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
-        affected = batch_df.select("user_id").distinct()
+        affected = batch_df.select(F.col("user_id").alias("_uid")).distinct()
+        # NULL-safe: a NULL user's rows must be found like any other's
+        hit = F.col("user_id").eqNullSafe(F.col("_uid"))
+        mine = self.history.join(affected, hit, "left_semi")
 
         # seed: each affected user's open row, replayed ahead of the
         # batch (event_id -1 sorts before any real event at equal ts)
-        open_rows = self.history.join(affected, "user_id", "left_semi").where(
-            F.col("is_current")
-        )
+        open_rows = mine.where(F.col("is_current"))
         seeds = open_rows.select(
             "user_id",
             F.col("state"),
@@ -77,9 +78,8 @@ class Scd2Maintainer(Monitor):
         w2 = Window.partitionBy("user_id").orderBy("valid_from")
         # versions continue from each user's closed-row count
         offsets = (
-            self.history.join(affected, "user_id", "left_semi")
-            .where(~F.col("is_current"))
-            .groupBy("user_id")
+            mine.where(~F.col("is_current"))
+            .groupBy(F.col("user_id").alias("_uid"))
             .agg(F.count(F.lit(1)).alias("n_closed"))
         )
         recomputed = (
@@ -88,7 +88,7 @@ class Scd2Maintainer(Monitor):
             )
             .withColumn("is_current", F.col("valid_to").isNull())
             .withColumn("rn", F.row_number().over(w2).cast("long"))
-            .join(offsets, "user_id", "left")
+            .join(offsets, hit, "left")
             .select(
                 "user_id",
                 "state",
@@ -100,13 +100,9 @@ class Scd2Maintainer(Monitor):
                 ),
             )
         )
-        untouched = self.history.join(
-            affected, "user_id", "left_anti"
-        ).unionByName(
+        untouched = self.history.join(affected, hit, "left_anti").unionByName(
             # affected users' CLOSED rows stay as-is
-            self.history.join(affected, "user_id", "left_semi").where(
-                ~F.col("is_current")
-            )
+            mine.where(~F.col("is_current"))
         )
         return {"history": untouched.unionByName(recomputed)}
 

@@ -70,7 +70,5 @@ def test_spark_signature_matches_python(spark):
     rows = [(i, x) for i, s in sets.items() for x in s]
     items = spark.createDataFrame(rows, "id long, code long")
     sig = MH.signature_df(items, "id", "code", PARAMS)
-    got = {
-        r["id"]: [r[f"m{i}"] for i in range(N)] for r in sig.collect()
-    }
+    got = {r["id"]: list(r["sg"]) for r in sig.collect()}
     assert got == {i: _sig(s) for i, s in sets.items()}

@@ -150,6 +150,27 @@ def test_lsh_candidate_joins_are_equi(spark, sf_small):
         ), f"{name}: band-bucket join must be hash/merge equi-join"
 
 
+@pytest.mark.parametrize(
+    "name", ["similar_users_minhash_lsh", "dedup_minhash_lsh"]
+)
+def test_lsh_bucket_generator_reads_projected_band_hashes(
+    spark, sf_small, name
+):
+    """The band-hash array is projected once and the generator reads
+    the column. A generator over the inline fold array plans the 16
+    folds twice: in the Generate and again in the Project above it,
+    once per exploded row."""
+    import re
+
+    df = all_queries()[name].fn(spark, sf_small)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    gens = [ln for ln in plan.splitlines() if "Generate posexplode(" in ln]
+    assert len(gens) >= 2, plan  # one per band self-join side
+    for ln in gens:
+        assert re.search(r"Generate posexplode\(bhs#\d+\)", ln), ln
+        assert "element_at" not in ln, ln
+
+
 def test_q6_full_pushdown(spark, sf_small):
     """Every q6 predicate must reach the parquet scan — at 100 TB the
     scan, not the agg, is the whole query."""

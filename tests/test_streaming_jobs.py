@@ -57,6 +57,56 @@ def test_recommendations_job(spark, sf_small, tmp_path):
         assert all(c <= 5 for c in counts.values())
 
 
+def test_recommendations_job_matches_duckdb(spark, sf_small, tmp_path):
+    """Each batch's recommendations equal the registered DuckDB mirror
+    (signature_sql + candidate_pairs_sql + est_similarity_sql, top-5
+    at est_sim >= 0.1) over the items accumulated so far, restricted
+    to the users with items in that batch."""
+    import glob
+
+    import duckdb
+
+    from mvrs_dspa_spark.operators.similarity import _ITEMS_SQL
+    from mvrs_dspa_spark.plans.registry import all_queries
+
+    ev = table(spark, sf_small, "events").limit(400)
+    paths = write_replay_batches(
+        ev, str(tmp_path / "replay"), n_batches=3, speedup=10_000.0
+    )
+    stream = read_replay_stream(spark, str(tmp_path / "replay"), ev.schema)
+    got: dict[int, list] = {}
+
+    def sink(df, batch_id):
+        got[batch_id] = sorted(
+            (r.user_id, r.rec_user_id, r.est_sim) for r in df.collect()
+        )
+
+    q = recommendations_job(stream, sink, str(tmp_path / "rec_ckpt"))
+    q.awaitTermination(300)
+    assert sorted(got) == list(range(len(paths)))
+
+    oracle = all_queries()["similar_users_minhash_lsh"].oracle
+    files = [glob.glob(f"{p}/*.parquet") for p in paths]
+    conn = duckdb.connect()
+    try:
+        for b in range(len(paths)):
+            conn.execute(
+                f"CREATE OR REPLACE VIEW events AS SELECT * FROM read_parquet({files[b]})"
+            )
+            active = {r[0] for r in conn.execute(_ITEMS_SQL).fetchall()}
+            seen = [f for fs in files[: b + 1] for f in fs]
+            conn.execute(
+                f"CREATE OR REPLACE VIEW events AS SELECT * FROM read_parquet({seen})"
+            )
+            want = sorted(
+                r for r in conn.execute(oracle).fetchall() if r[0] in active
+            )
+            assert got[b] == want, b
+    finally:
+        conn.close()
+    assert any(got.values()), "no recommendations produced"
+
+
 def test_unusual_activity_job(spark, sf_small, tmp_path):
     stream = _replayed_events(spark, sf_small, tmp_path)
     model = StreamingKMeansModel(

@@ -88,3 +88,17 @@ def test_markov_empty_state_report(spark):
         assert r.base_conversion == 0.0
         assert r.removal_effect == 0.0
         assert r.attribution_share is None
+
+
+def test_null_user_journey_chains_across_batches(spark):
+    """A NULL user's second batch closes the carried journey instead
+    of reopening it with another 'start' transition."""
+    import datetime as dt
+
+    schema = table(spark, SF, "events").schema
+    t0 = dt.datetime(2024, 1, 1)
+    mon = MarkovMonitor(spark)
+    for b, etype in enumerate(("view", "click")):
+        row = (b + 1, t0 + dt.timedelta(minutes=b), None, etype, 1.0, "{}")
+        mon.update(spark.createDataFrame([row], schema), b)
+    assert _rows(mon.grid) == [("start", "view", 1), ("view", "click", 1)]

@@ -113,3 +113,27 @@ def test_streaming_scd2_history_partitions_stay_bounded(
         assert sorted(r.version for r in rs) == list(
             range(1, len(rs) + 1)
         ), uid
+
+
+def test_null_user_history_chains_across_batches(spark):
+    """A NULL user's open row is closed by the next batch like any
+    other user's: the chain equals the batch `state_intervals`."""
+    import datetime as dt
+
+    from mvrs_dspa_spark.plans.analytics import state_intervals
+
+    schema = table(spark, SF, "events").schema
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (b + 1, t0 + dt.timedelta(minutes=b), None, etype, 1.0, "{}")
+        for b, etype in enumerate(("view", "click"))
+    ]
+    mon = Scd2Maintainer(spark)
+    for b, row in enumerate(rows):
+        mon.update(spark.createDataFrame([row], schema), b)
+    want = _rows(state_intervals(spark.createDataFrame(rows, schema)))
+    assert sorted((r[5], r[1], r[4]) for r in want) == [
+        (1, "view", False),
+        (2, "click", True),
+    ]
+    assert _rows(mon.history) == want
