@@ -101,13 +101,18 @@ def bucket_rows_from_sig_df(df: DataFrame, n: int, bands: int) -> DataFrame:
     generator over the inline fold array plans the 16 folds twice,
     once in the Generate and again in the Project above it, per
     exploded row. Callers that never read ``bhs`` lose it to column
-    pruning."""
+    pruning.
+
+    The generator is ``posexplode_outer``: for a plain ``posexplode``
+    Spark infers a ``size(bhs) > 0`` filter and pushes it below the
+    Project that defines ``bhs``, which evaluates the fold a second
+    time per set. ``bhs`` is never empty, so the rows are the same."""
     folds = ", ".join(
         _band_hash_sql([f"element_at(sg, {i + 1})" for i in band])
         for band in _bands(n, bands)
     )
     with_bhs = df.select("*", F.expr(f"array({folds})").alias("bhs"))
-    return with_bhs.select("*", F.posexplode("bhs").alias("band", "bh"))
+    return with_bhs.select("*", F.posexplode_outer("bhs").alias("band", "bh"))
 
 
 def sig_match_count_col(a: Column, b: Column) -> Column:

@@ -145,13 +145,22 @@ def recommendations_job(
         scored = MH.scored_candidate_pairs_from_array_sig_df(
             sig, "user_id", N_HASHES, BANDS
         )
+        # both directions from one projection: a union of two selects
+        # over `scored` would run the band join once per branch
         both = scored.select(
-            F.col("id_a").alias("user_id"), F.col("id_b").alias("rec_user_id"), "est_sim"
-        ).unionByName(
-            scored.select(
-                F.col("id_b").alias("user_id"),
-                F.col("id_a").alias("rec_user_id"),
-                "est_sim",
+            F.inline(
+                F.array(
+                    F.struct(
+                        F.col("id_a").alias("user_id"),
+                        F.col("id_b").alias("rec_user_id"),
+                        "est_sim",
+                    ),
+                    F.struct(
+                        F.col("id_b").alias("user_id"),
+                        F.col("id_a").alias("rec_user_id"),
+                        "est_sim",
+                    ),
+                )
             )
         )
         from pyspark.sql import Window

@@ -60,14 +60,19 @@ def measure_stream_throughput(
 
     `state_partitions` sets `spark.sql.shuffle.partitions` for this
     query only (restored after): for a stateful pipeline that is the
-    state-store instance count, and the round-8 profile showed the
-    per-micro-batch cost is dominated by per-partition store commits,
-    NOT row work — at sf0.1 on local[32] the sliding pipeline runs
-    30.3k rows/s at 32 partitions / 4 batches but 75.4k rows/s at 8
-    partitions / 1 batch (min-of-3, same JVM), i.e. wall ~= batches x
-    partitions x commit_cost + linear row work. Size state partitions
-    to state VOLUME (peak state rows / ~1M), never default them to
-    core count. On a local session each created file costs its write,
+    state-store instance count. The round-8 profile fit wall ~=
+    batches x partitions x commit_cost + linear row work: at sf0.1 on
+    local[32] the sliding pipeline ran 30.3k rows/s at 32 partitions /
+    4 batches but 75.4k rows/s at 8 partitions / 1 batch (min-of-3,
+    same JVM). The count trades each partition's fixed cost per
+    micro-batch (one task, its delta and checksum files, about four
+    `chmod` forks) against running the batch's row work in parallel,
+    so neither state volume nor core count alone sizes it. On a 4-core
+    local session, `active_post_stats_job` with one state partition
+    instead of four ran 1k-event micro-batches 7% faster (6 of 6
+    alternating pairs) but large micro-batches 25-35% slower (3 of 3).
+    Few partitions suit small batches; larger batches repay one per
+    core. On a local session each created file costs its write,
     its rename and about two `chmod` forks (the file and its `.crc`,
     from `RawLocalFileSystem.setPermission` without libhadoop); the
     `session.py` module docstring explains the checkpoint manager

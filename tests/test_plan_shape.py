@@ -159,7 +159,9 @@ def test_lsh_bucket_generator_reads_projected_band_hashes(
     """The band-hash array is projected once and the generator reads
     the column. A generator over the inline fold array plans the 16
     folds twice: in the Generate and again in the Project above it,
-    once per exploded row."""
+    once per exploded row. The outer generator keeps Spark from
+    inferring a `size(bhs) > 0` filter below that Project, a second
+    fold per set; the bucket stage stays whole-stage codegen."""
     import re
 
     df = all_queries()[name].fn(spark, sf_small)
@@ -169,6 +171,11 @@ def test_lsh_bucket_generator_reads_projected_band_hashes(
     for ln in gens:
         assert re.search(r"Generate posexplode\(bhs#\d+\)", ln), ln
         assert "element_at" not in ln, ln
+    assert "size(" not in plan, plan
+    df.collect()  # the adaptive plan inserts codegen stages as it runs
+    final = df._jdf.queryExecution().executedPlan().toString()
+    starred = re.findall(r"\*\(\d+\) Generate posexplode\(bhs#\d+\)", final)
+    assert len(starred) >= 2, final
 
 
 def test_q6_full_pushdown(spark, sf_small):

@@ -3,6 +3,8 @@ jobs/ parity: activeposts, recommendations, clustering)."""
 
 from __future__ import annotations
 
+import re
+
 from mvrs_dspa_spark.streaming.jobs import (
     active_post_stats_job,
     recommendations_job,
@@ -37,13 +39,18 @@ def test_active_post_stats_job(spark, sf_small, tmp_path):
 def test_recommendations_job(spark, sf_small, tmp_path):
     stream = _replayed_events(spark, sf_small, tmp_path)
     batches: list[tuple[int, list]] = []
+    plans: list[str] = []
 
     def sink(df, batch_id):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
         batches.append((batch_id, df.collect()))
 
     q = recommendations_job(stream, sink, str(tmp_path / "rec_ckpt"))
     q.awaitTermination(300)
     assert len(batches) >= 2  # one result set per non-empty micro-batch
+    # both recommendation directions come from one scoring pass
+    for plan in plans:
+        assert len(re.findall(r"Join \[band#", plan)) == 1, plan
     rows = [r for _, rs in batches for r in rs]
     assert rows, "no recommendations produced"
     for r in rows:

@@ -1,7 +1,11 @@
 #!/usr/bin/env python3
 """Profile one or more registered queries: capture explain('formatted'),
-time count() and noop-sink executions (steady-state min-of-3), and
-summarize plan shape (Exchange count, join strategies, Python nodes).
+time count() and noop-sink executions (steady-state min-of-3), count
+the generated classes compiled during those timed runs and their
+compile milliseconds, and summarize plan shape (Exchange count, join
+strategies, Python nodes). A query that compiles classes in every timed
+run generates different code each time it is built, so the codegen
+class cache cannot serve it.
 
 Usage: python tools/profile_query.py [--plans-out DIR] [--sf DIR] name...
 """
@@ -33,6 +37,30 @@ def plan_shape(plan: str) -> str:
     return ", ".join(f"{k}={v}" for k, v in counts.items())
 
 
+def codegen_compiled(spark) -> tuple[int, float]:
+    """(classes compiled, compile ms) so far in this JVM: Spark counts
+    a class only when its source misses the codegen class cache."""
+    jvm = spark.sparkContext._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return n, ns / 1e6
+
+
+def timed(spark, runs: int, run) -> tuple[list[float], int, float]:
+    """One untimed warm run, then `runs` timed ones: their seconds,
+    classes compiled and compile ms."""
+    run()
+    n0, ms0 = codegen_compiled(spark)
+    secs = []
+    for _ in range(runs):
+        spark._jvm.System.gc()
+        t0 = time.perf_counter()
+        run()
+        secs.append(time.perf_counter() - t0)
+    n1, ms1 = codegen_compiled(spark)
+    return secs, n1 - n0, ms1 - ms0
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
@@ -58,26 +86,14 @@ def main() -> None:
                                    f"{name}_{args.suffix}.txt"), "w") as f:
                 f.write(plan)
         spark.sparkContext.setJobDescription(f"profile:{name}")
-        # warm
-        q[name](spark, args.sf).count()
-        tc = []
-        for _ in range(args.runs):
-            spark._jvm.System.gc()
-            t0 = time.perf_counter()
-            q[name](spark, args.sf).count()
-            tc.append(time.perf_counter() - t0)
-        tn = []
-        if not args.no_noop:
-            q[name](spark, args.sf).write.format("noop").mode("overwrite").save()
-            for _ in range(args.runs):
-                spark._jvm.System.gc()
-                t0 = time.perf_counter()
-                q[name](spark, args.sf).write.format("noop").mode(
-                    "overwrite").save()
-                tn.append(time.perf_counter() - t0)
+        tc, nc, msc = timed(spark, args.runs, lambda: q[name](spark, args.sf).count())
+        tn, nn, msn = ([], 0, 0.0) if args.no_noop else timed(
+            spark, args.runs,
+            lambda: q[name](spark, args.sf).write.format("noop").mode("overwrite").save())
         spark.sparkContext.setJobDescription(None)
         print(f"{name}: count_min={min(tc):.3f} "
               + (f"noop_min={min(tn):.3f} " if tn else "")
+              + f"compiled={nc + nn} compile_ms={msc + msn:.1f} "
               + f"| {plan_shape(plan)}", flush=True)
 
 
