@@ -18,6 +18,15 @@ builders and the DuckDB oracle SQL strings, so any override changes
 the two engines in lockstep — correctness gates stay green at every
 setting (pinned by tests/test_config.py via a subprocess override).
 
+The stream builders take their defaults from the same fields as their
+batch twins (``streaming/windowed.py``):
+``sliding_stats_stream`` (and with it ``active_post_stats_job``) reads
+``activity.window_size_hours`` / ``window_slide_hours`` like
+``operators/window_stats.sliding_window_stats``, and
+``session_stats_stream`` reads ``sessions.gap_minutes`` like
+``operators/sessionize``. Every field here has a reader; a config file
+naming a field that does not exist fails with "unknown config key".
+
 Hot reload is intentionally out of scope here: registered queries
 capture their constants at import (one process = one config), matching
 the reference where changing application.conf means restarting the
@@ -57,11 +66,6 @@ class DataSettings:
 
     # event-time replay acceleration (ref: speedup-factor = 10000)
     speedup_factor: float = 10000.0
-    # bounded random out-of-order delay for replay, in event-time
-    # minutes (ref: random-delay = 30 minutes)
-    random_delay_minutes: int = 30
-    # assumed max out-of-orderness -> watermark bound (ref: 30 minutes)
-    max_out_of_orderness_minutes: int = 30
     # parent directory of the parquet tables (ref: MVRS_DSPA_DATA_DIR)
     tables_directory: str = "/root/testdata/sf0.001"
 

@@ -27,9 +27,12 @@ Sinks: ``parquet`` (default; recommendations write per-batch
 idempotent batch_id=N directories) or ``es`` (requires the
 elasticsearch-spark connector; endpoint from settings.elasticsearch).
 
-Everything tunable inherits the typed settings object (config.py) so
+The jobs' tunables come from the typed settings object (config.py):
+the input directory, the Kafka and Elasticsearch endpoints, the
+sliding-window size and slide, and the K-means k and decay. So
 `MVRS_DSPA_*` env overrides reach the CLI exactly like the reference's
-HOCON env substitutions reach its mains.
+HOCON env substitutions reach its mains. The watermark and the replay
+batch count are CLI flags instead.
 """
 
 from __future__ import annotations

@@ -51,12 +51,7 @@ LSH_DIM = 64
 LSH_TARGET_OCCUPANCY = 8
 
 
-def lsh_bits_for(
-    n_rows: int,
-    target_occupancy: int = LSH_TARGET_OCCUPANCY,
-    lo: int = 4,
-    hi: int = 48,
-) -> int:
+def lsh_bits_for(n_rows: int) -> int:
     """Signature width so expected bucket occupancy n / 2^bits ~= target.
 
     With occupancy pinned, total candidate pairs grow linearly in n
@@ -64,9 +59,9 @@ def lsh_bits_for(
     (fixed bucket count -> occupancy ~ n -> pairs ~ n^2)."""
     import math
 
-    if n_rows <= target_occupancy:
-        return lo
-    return max(lo, min(hi, math.ceil(math.log2(n_rows / target_occupancy))))
+    if n_rows <= LSH_TARGET_OCCUPANCY:
+        return 4
+    return max(4, min(48, math.ceil(math.log2(n_rows / LSH_TARGET_OCCUPANCY))))
 
 
 def dot_col(a: Column, b: Column) -> Column:
@@ -198,10 +193,10 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hyperplanes(bits: int, dim: int, seed: int = 97) -> list[list[float]]:
+def _hyperplanes(bits: int, dim: int) -> list[list[float]]:
     """Deterministic pseudo-gaussian hyperplanes from the shared LCG
     (sum of 4 scaled uniforms; no engine RNG involved)."""
-    params = H.hash_params(bits * dim * 4, seed=seed)
+    params = H.hash_params(bits * dim * 4, seed=97)
     planes = []
     idx = 0
     for _ in range(bits):
@@ -248,25 +243,6 @@ def _cos_udf():
     return cos
 
 
-def _fold_mm(X: "np.ndarray", Y: "np.ndarray") -> "np.ndarray":
-    """X (n,d) @ Y (d,m) with additions strictly in dimension order.
-
-    BLAS matmul sums in an unspecified blocked order, so its doubles
-    can differ from the sequential zip_with / list_reduce fold by
-    ulps — enough to flip a near-zero hyperplane sign or a
-    6th-decimal rounding between engines. Accumulating one dimension
-    at a time performs, per output element, the exact rounded-op
-    sequence ((0 + x1*y1) + x2*y2) + ... that `dot_col` and
-    `_dot_sql` define, while staying vectorized over rows (d numpy
-    ops per batch, not n*m*d Python ops). This is what makes the LSH
-    family's numpy fast path bit-identical to a DuckDB oracle
-    (r11 rows->oracle conversion of ann_lsh / ann_lsh_banded)."""
-    acc = np.zeros((X.shape[0], Y.shape[1]), dtype=np.float64)
-    for i in range(X.shape[1]):
-        acc += X[:, i : i + 1] * Y[i : i + 1, :]
-    return acc
-
-
 def _cos_fold_udf():
     """pandas_udf: batched cosine whose every double is bit-identical
     to `_dot_sql(a,b) / (sqrt(_dot_sql(a,a)) * sqrt(_dot_sql(b,b)))`
@@ -291,11 +267,7 @@ def _cos_fold_udf():
 
 
 def lsh_signatures(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    bits: int | None = None,
-    dim: int = LSH_DIM,
+    df: DataFrame, bits: int | None = None, dim: int = LSH_DIM
 ) -> DataFrame:
     """Attach a random-hyperplane LSH signature column `sig`.
 
@@ -317,42 +289,36 @@ def lsh_signatures(
         X = np.asarray([np.asarray(x, dtype=np.float64) for x in emb])
         if len(X) == 0:
             return pd.Series([], dtype="int64")
-        # dimension-ordered fold, not BLAS (see _fold_mm): each
-        # projection double is bit-identical to the dot_col/_dot_sql
-        # fold, so the sign — and with it every bucket bit — matches
-        # the DuckDB oracle. Inlined rather than calling _fold_mm: a
-        # module-global reference would make cloudpickle ship the UDF
-        # by reference and demand the package importable on workers.
+        # dimension-ordered fold, not BLAS: a BLAS matmul sums in a
+        # blocked order whose doubles can differ by ulps from the
+        # sequential ((0 + x1*y1) + x2*y2) + ... fold that dot_col and
+        # _dot_sql define. Accumulating one dimension at a time keeps
+        # each projection double bit-identical, so the sign — and
+        # with it every bucket bit — matches the DuckDB oracle.
         acc = np.zeros((X.shape[0], planes_t.shape[1]))
         for i in range(X.shape[1]):
             acc += X[:, i : i + 1] * planes_t[i : i + 1, :]
         b = acc > 0
         return pd.Series((b * weights).sum(axis=1).astype(np.int64))
 
-    return df.select(id_col, vec_col, sig_udf(vec_col).alias("sig"))
+    return df.select("vec_id", "embedding", sig_udf("embedding").alias("sig"))
 
 
-def lsh_near_dup(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    bits: int | None = None,
-    dim: int = LSH_DIM,
-) -> DataFrame:
+def lsh_near_dup(df: DataFrame, bits: int | None = None) -> DataFrame:
     """Within-bucket cosine pairs over LSH signatures (scale path)."""
-    v = lsh_signatures(df, vec_col, id_col, bits, dim)
+    v = lsh_signatures(df, bits)
     a, b = v.alias("a"), v.alias("b")
     return (
         a.join(
             b,
             (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("vec_a"),
-            F.col(f"b.{id_col}").alias("vec_b"),
+            F.col("a.vec_id").alias("vec_a"),
+            F.col("b.vec_id").alias("vec_b"),
             F.round(
-                _cos_fold_udf()(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")),
+                _cos_fold_udf()(F.col("a.embedding"), F.col("b.embedding")),
                 6,
             ).alias("cos_sim"),
         )
@@ -360,19 +326,19 @@ def lsh_near_dup(
     )
 
 
-def _planes_sql(bits: int, dim: int = LSH_DIM) -> str:
+def _planes_sql(bits: int) -> str:
     """The LCG hyperplanes as SQL row literals (repr round-trips the
     exact doubles the Spark path loads into numpy)."""
     return ", ".join(
         f"({b}, [{', '.join(repr(v) for v in vec)}])"
-        for b, vec in enumerate(_hyperplanes(bits, dim))
+        for b, vec in enumerate(_hyperplanes(bits, LSH_DIM))
     )
 
 
 def _lsh_sig_ctes(bits: int) -> str:
     """Shared oracle CTEs: hyperplane sign bits -> packed signature ->
     signature + norm per vector. Every double comes from the same
-    left-to-right fold the Spark path replays via _fold_mm, so signs,
+    left-to-right fold the Spark path replays (see lsh_signatures), so signs,
     buckets, and cosines are bit-identical across engines."""
     return f"""
         planes(b, pvec) AS (VALUES {_planes_sql(bits)}),
@@ -412,7 +378,7 @@ def _lsh_sig_ctes(bits: int) -> str:
     "bits from lsh_bits_for(n) so bucket occupancy — and with it the "
     "within-bucket pair volume per row — stays constant as data grows. "
     "r11 rows->oracle conversion: the numpy fast path accumulates in "
-    "dimension order (_fold_mm), making projections, bucket bits, and "
+    "dimension order, making projections, bucket bits, and "
     "cosines bit-identical to the DuckDB fold — the full bucketed "
     "candidate join is now under a value-hash gate, not just the "
     "pinned-plane assignment step.",
@@ -524,8 +490,8 @@ def ivf_cell_udf(cents: list[list[float]]):
     return cell_udf
 
 
-def ivf_probe_udf(cents: list[list[float]], nprobe: int = IVF_NPROBE):
-    """pandas_udf returning each query's nprobe nearest cell ids."""
+def ivf_probe_udf(cents: list[list[float]]):
+    """pandas_udf returning each query's IVF_NPROBE nearest cell ids."""
     C = np.asarray(cents)
     c_sq = (C * C).sum(axis=1)
 
@@ -535,7 +501,7 @@ def ivf_probe_udf(cents: list[list[float]], nprobe: int = IVF_NPROBE):
         d = c_sq - 2.0 * (X @ C.T)
         # stable sort: equidistant cells resolve to the lowest id in
         # every batch, keeping output partitioning-independent
-        order = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
+        order = np.argsort(d, axis=1, kind="stable")[:, :IVF_NPROBE]
         return pd.Series(list(order.astype(np.int32)))
 
     return probe_udf
@@ -543,30 +509,24 @@ def ivf_probe_udf(cents: list[list[float]], nprobe: int = IVF_NPROBE):
 
 def build_ivf_index(
     v: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nlist: int = IVF_NLIST,
-    iters: int = IVF_ITERS,
 ) -> tuple[DataFrame | None, list[list[float]]]:
-    """Coarse-quantize a vector table: returns (inverted lists with a
-    `cluster` column, centroids). (None, []) on empty input."""
+    """Coarse-quantize a (vec_id, embedding) table: returns (inverted
+    lists with a `cluster` column, centroids). (None, []) on empty
+    input."""
     from mvrs_dspa_spark.operators.clustering import kmeans_fit
 
-    cents = kmeans_fit(v, vec_col, k=nlist, iters=iters, id_col=id_col)
+    cents = kmeans_fit(
+        v, "embedding", k=IVF_NLIST, iters=IVF_ITERS, id_col="vec_id"
+    )
     if not cents:
         return None, []
-    lists = v.select(
-        id_col, vec_col, ivf_cell_udf(cents)(vec_col).alias("cluster")
-    )
+    cell = ivf_cell_udf(cents)("embedding")
+    lists = v.select("vec_id", "embedding", cell.alias("cluster"))
     return lists, cents
 
 
 def build_ivf_index_exact(
     v: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nlist: int = IVF_NLIST,
-    iters: int = IVF_ITERS,
 ) -> tuple[DataFrame | None, list[list[int]]]:
     """build_ivf_index on the exact integer grid (r11 ann_ivf
     rows->oracle conversion): the coarse quantizer is
@@ -578,17 +538,19 @@ def build_ivf_index_exact(
         kmeans_fit_exact,
     )
 
-    cents = kmeans_fit_exact(v, vec_col, k=nlist, iters=iters, id_col=id_col)
+    cents = kmeans_fit_exact(
+        v, "embedding", k=IVF_NLIST, iters=IVF_ITERS, id_col="vec_id"
+    )
     if not cents:
         return None, []
-    lists = assign_clusters_exact(v, vec_col, cents).select(
-        id_col, vec_col, "cluster"
+    lists = assign_clusters_exact(v, "embedding", cents).select(
+        "vec_id", "embedding", "cluster"
     )
     return lists, cents
 
 
-def ivf_probe_udf_exact(cents: list[list[int]], nprobe: int = IVF_NPROBE):
-    """pandas_udf: each query's nprobe nearest cells on the integer
+def ivf_probe_udf_exact(cents: list[list[int]]):
+    """pandas_udf: each query's IVF_NPROBE nearest cells on the integer
     grid — exact int64 distances, stable argsort (equidistant cells
     resolve to the lowest id), matching the oracle's
     ORDER BY (d2, c) row_number rank."""
@@ -609,7 +571,7 @@ def ivf_probe_udf_exact(cents: list[list[int]], nprobe: int = IVF_NPROBE):
         # ||q-c||^2 ordering == (||c||^2 - 2 q.c) ordering (the ||q||^2
         # term is constant per row); all int64-exact
         d = (C * C).sum(axis=1)[None, :] - 2 * (Q @ C.T)
-        order = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
+        order = np.argsort(d, axis=1, kind="stable")[:, :IVF_NPROBE]
         return pd.Series(list(order.astype(np.int32)))
 
     return probe_udf
@@ -757,18 +719,10 @@ LSH_BAND_BITS = 4
 LSH_N_BANDS = 8
 
 
-def lsh_near_dup_banded(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    band_bits: int = LSH_BAND_BITS,
-    n_bands: int = LSH_N_BANDS,
-    threshold: float = NEAR_DUP_COS,
-    dim: int = LSH_DIM,
-) -> DataFrame:
+def lsh_near_dup_banded(df: DataFrame) -> DataFrame:
     """Near-dup pairs via banded hyperplane LSH: candidates share at
     least one signature band, exact cosine verifies (no false
-    positives; recall set by (band_bits, n_bands)).
+    positives; recall set by (LSH_BAND_BITS, LSH_N_BANDS)).
 
     Scoring is BUCKET-LOCAL: one applyInPandas over (band, bsig)
     groups does the within-bucket all-pairs cosine as a single numpy
@@ -778,27 +732,27 @@ def lsh_near_dup_banded(
     constant fraction of all pairs, so that's pairs x 2 x dim doubles
     of transfer vs rows x bands here. Measured 4.65 s -> 0.78 s at
     sf0.1 (same 727 pairs)."""
-    v = lsh_signatures(df, vec_col, id_col, bits=band_bits * n_bands, dim=dim)
-    mask = (1 << band_bits) - 1
+    v = lsh_signatures(df, bits=LSH_BAND_BITS * LSH_N_BANDS)
+    mask = (1 << LSH_BAND_BITS) - 1
     banded = v.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
+        "vec_id",
+        "embedding",
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(j).alias("band"),
-                        F.shiftright("sig", j * band_bits)
+                        F.shiftright("sig", j * LSH_BAND_BITS)
                         .bitwiseAND(F.lit(mask))
                         .alias("bsig"),
                     )
-                    for j in range(n_bands)
+                    for j in range(LSH_N_BANDS)
                 ]
             )
         ).alias("bk"),
     ).select("vec_id", "embedding", "bk.band", "bk.bsig")
 
-    thr = float(threshold)
+    thr = float(NEAR_DUP_COS)
 
     def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np  # self-contained closure
@@ -813,7 +767,7 @@ def lsh_near_dup_banded(
         X = np.asarray(
             [np.asarray(x, dtype=np.float64) for x in pdf["embedding"]]
         )
-        # dimension-ordered fold (see _fold_mm): the numerator matrix
+        # dimension-ordered fold (see lsh_signatures): the numerator matrix
         # and the fold-of-squares norms are bit-identical to the
         # _dot_sql oracle, so the raw-threshold filter and the
         # reported cosine agree with DuckDB double-for-double.
@@ -888,7 +842,7 @@ def lsh_near_dup_banded(
     "threshold on the gate corpus); exact cosine verification keeps "
     "precision 1.0. Candidates stay an equi-join on (band, band-sig). "
     "r11 rows->oracle conversion: bucket-local scoring accumulates in "
-    "dimension order (_fold_mm) and thresholds the RAW double exactly "
+    "dimension order and thresholds the RAW double exactly "
     "like embedding_near_dup's WHERE, so the pair set and every "
     "6-decimal cosine value-hash-match the DuckDB band-join oracle.",
     tags=("ann", "scale"),
@@ -1018,18 +972,6 @@ def ann_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- IVF-PQ: compressed-domain ANN (FAISS IVFPQ layout) ---------------------
-
-
-def _residual_udf(cents: list[list[float]]):
-    C = np.asarray(cents)
-
-    @F.pandas_udf("array<double>")
-    def resid(emb: pd.Series, cluster: pd.Series) -> pd.Series:
-        X = np.asarray([np.asarray(x, dtype=np.float64) for x in emb])
-        out = X - C[cluster.to_numpy()]
-        return pd.Series(list(out))
-
-    return resid
 
 
 def _residual_exact_udf(cents: list[list[int]]):
@@ -1345,26 +1287,6 @@ REFIT_GROWTH = 2.0  # cell flagged when delta doubles its population
 REFIT_DIST = 1.5    # ...or delta vectors sit 1.5x further from the centroid
 
 
-def ivf_assign_dist_udf(cents: list[list[float]]):
-    """pandas_udf: nearest cell AND squared distance to it, one matmul."""
-    C = np.asarray(cents)
-    c_sq = (C * C).sum(axis=1)
-
-    @F.pandas_udf("struct<cluster:int, sq_dist:double>")
-    def assign_udf(emb: pd.Series) -> pd.DataFrame:
-        X = np.asarray([np.asarray(x, dtype=np.float64) for x in emb])
-        d = c_sq - 2.0 * (X @ C.T) + (X * X).sum(axis=1, keepdims=True)
-        cell = d.argmin(axis=1)
-        return pd.DataFrame(
-            {
-                "cluster": cell.astype(np.int32),
-                "sq_dist": d[np.arange(len(cell)), cell],
-            }
-        )
-
-    return assign_udf
-
-
 def _maintenance_oracle() -> str:
     """Exact-grid mirror of ann_index_maintenance: the quantizer fits
     on the base slice (unrolled Lloyd, lowest-vec_id init), every
@@ -1468,9 +1390,7 @@ def ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return maintenance_report_from_stats(maintenance_cell_stats(v, cents))
 
 
-def maintenance_cell_stats(
-    df: DataFrame, cents: list[list[int]], mod: int = ANN_INCR_MOD
-) -> DataFrame:
+def maintenance_cell_stats(df: DataFrame, cents: list[list[int]]) -> DataFrame:
     """(cluster, is_base, n, s_d2): exact int64 per-cell count +
     squared-distance sum against the FIXED quantizer. ADDITIVE in the
     rows, so the streaming maintainer (29as) merges these deltas
@@ -1480,7 +1400,7 @@ def maintenance_cell_stats(
 
     a = assign_clusters_exact(df, "embedding", cents)
     return a.groupBy(
-        "cluster", (F.col("vec_id") % mod != 0).alias("is_base")
+        "cluster", (F.col("vec_id") % ANN_INCR_MOD != 0).alias("is_base")
     ).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("sq_dist_q").alias("s_d2"),
@@ -1567,17 +1487,15 @@ def ivf_query(
     lists: DataFrame,
     cents: list[list[float]],
     queries: DataFrame,
-    nprobe: int = IVF_NPROBE,
-    top_k: int = TOP_K,
 ) -> DataFrame:
     """Probe an IVF index (fresh or loaded) with a query table
-    (vec_id, embedding): per query, exact cosine inside its nprobe
-    nearest cells, top-k. The cluster equi-join against the
+    (vec_id, embedding): per query, exact cosine inside its IVF_NPROBE
+    nearest cells, top TOP_K. The cluster equi-join against the
     cell-partitioned lists prunes partitions before scanning."""
     probes = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
-        F.explode(ivf_probe_udf(cents, nprobe)("embedding")).alias("cluster"),
+        F.explode(ivf_probe_udf(cents)("embedding")).alias("cluster"),
     )
     joined = probes.join(lists.alias("v"), "cluster").where(
         F.col("query_id") != F.col("v.vec_id")
@@ -1593,7 +1511,7 @@ def ivf_query(
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= top_k)
+        .where(F.col("rn") <= TOP_K)
         .select("query_id", "neighbor_id", "cos_sim")
         .orderBy("query_id", F.col("cos_sim").desc(), "neighbor_id")
     )

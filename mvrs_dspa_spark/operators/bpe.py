@@ -202,8 +202,8 @@ _BPE_VOCAB_SQL = (
 )
 
 
-def _bpe_train_sql(rounds: int = BPE_ROUNDS) -> str:
-    ctes, tops = _bpe_chain_ctes(rounds, _BPE_VOCAB_SQL)
+def _bpe_train_sql() -> str:
+    ctes, tops = _bpe_chain_ctes(BPE_ROUNDS, _BPE_VOCAB_SQL)
     return (
         "WITH "
         + ",\n".join(ctes)
@@ -277,14 +277,14 @@ def bpe_encode_vocab(
 _FERT_VOCAB_SQL = "SELECT w, SUM(n) AS freq FROM lang_w GROUP BY w"
 
 
-def _tokenizer_fertility_sql(rounds: int = BPE_ROUNDS) -> str:
+def _tokenizer_fertility_sql() -> str:
     """Train + encode + per-language rollup, all in SQL (r9): the
     shared _bpe_chain_ctes merge chain carries `w` through every
     stage, so the final stage's symbol string IS the encoded word —
     n_pieces is one split-length away, and fertility is integer sums
     with single final divisions."""
     sep, s2 = _SEP, _SEP + _SEP
-    ctes, _tops = _bpe_chain_ctes(rounds, _FERT_VOCAB_SQL, carry="w, ")
+    ctes, _tops = _bpe_chain_ctes(BPE_ROUNDS, _FERT_VOCAB_SQL, carry="w, ")
     pre = [
         f"toksl AS (SELECT lang, unnest({T.tokens_sql('text')}) AS w"
         " FROM documents)",
@@ -299,7 +299,7 @@ def _tokenizer_fertility_sql(rounds: int = BPE_ROUNDS) -> str:
             SELECT w,
                    CAST(len(string_split(trim(sym, '{sep}'), '{s2}'))
                         AS BIGINT) AS n_pieces
-            FROM v{rounds}
+            FROM v{BPE_ROUNDS}
         )
         SELECT lang,
                CAST(SUM(n) AS BIGINT) AS n_words,

@@ -40,8 +40,8 @@ def write_bucketed(
 
 
 def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str, how: str = "inner"
+    spark: SparkSession, left_table: str, right_table: str, key: str
 ) -> DataFrame:
     """Join two same-bucketed tables on their bucket key — planwise
     shuffle-free (verify: no Exchange in the explain output)."""
-    return spark.table(left_table).join(spark.table(right_table), key, how)
+    return spark.table(left_table).join(spark.table(right_table), key, "inner")

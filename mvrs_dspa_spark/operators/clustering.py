@@ -27,12 +27,11 @@ from pyspark.sql import functions as F
 
 from mvrs_dspa_spark.config import settings
 from mvrs_dspa_spark.plans.registry import register
-from mvrs_dspa_spark.tables import props_k_col, table
+from mvrs_dspa_spark.tables import EVENT_TYPES, props_k_col, table
 
 K = settings.clustering.embedding_k
 ITERS = settings.clustering.kmeans_iters
 UA_K = settings.clustering.default_k  # ref: activity-detection.default-k
-EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
 # Below this many rows the Lloyd loop runs driver-side on a collected
 # copy (one Spark job instead of 2+iters). Same spirit as AQE picking

@@ -44,7 +44,6 @@ from mvrs_dspa_spark.plans.registry import register
 from mvrs_dspa_spark.tables import table
 
 BENCH_MOD = 25  # doc_id % 25 == 0 -> benchmark member (4% of docs)
-NGRAM = 8
 _K2, _K3 = 37, 41  # level combiners; 31 at level 1 matches dedup shingles
 
 

@@ -468,9 +468,7 @@ _PAIRS_SQL = f"""
 CC_MAX_ROUNDS = 16
 
 
-def cluster_components(
-    nodes: DataFrame, edges: DataFrame, max_rounds: int = CC_MAX_ROUNDS
-) -> DataFrame:
+def cluster_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Connected components by min-label propagation.
 
     `nodes` is (doc,), `edges` is directed (a, b) — pass both
@@ -486,7 +484,7 @@ def cluster_components(
     labels = nodes.select(F.col("doc"), F.col("doc").alias("comp")).localCheckpoint(
         eager=True
     )
-    for _ in range(max_rounds):
+    for _ in range(CC_MAX_ROUNDS):
         nmin = (
             edges.join(labels, edges["b"] == labels["doc"])
             .groupBy(F.col("a").alias("doc2"))
@@ -498,7 +496,7 @@ def cluster_components(
         labels = joined.select(
             "doc", F.least("comp", F.coalesce("nmin", "comp")).alias("comp")
         ).localCheckpoint(eager=True)
-    raise RuntimeError(f"components did not converge in {max_rounds} rounds")
+    raise RuntimeError(f"components did not converge in {CC_MAX_ROUNDS} rounds")
 
 
 @register(

@@ -36,10 +36,8 @@ from mvrs_dspa_spark.tables import table
 PCA_K = 4
 
 
-def pca_fit(
-    emb: DataFrame, vec_col: str = "embedding", k: int = PCA_K
-) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
-    """Fit PCA over a DataFrame's vector column.
+def pca_fit(emb: DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
+    """Fit PCA (PCA_K components) over a DataFrame's `embedding` column.
 
     Returns ``(mean[d], components[d,k], explained_var[k])``, or
     ``None`` when the input is empty (no model is definable).
@@ -64,7 +62,7 @@ def pca_fit(
                 {"part": [np.concatenate(([n], s, g)).tolist()]}
             )
 
-    part = emb.select(F.col(vec_col).alias("v")).mapInPandas(
+    part = emb.select(F.col("embedding").alias("v")).mapInPandas(
         partials, schema="part array<double>"
     )
     # Positional reduce: (batches × (1+d+d²)) rows shuffle down to
@@ -86,7 +84,7 @@ def pca_fit(
     gram = vec[1 + d :].reshape(d, d)
     cov = gram / n - np.outer(mean, mean)
     eigval, eigvec = np.linalg.eigh(cov)
-    order = np.argsort(eigval)[::-1][:k]
+    order = np.argsort(eigval)[::-1][:PCA_K]
     comps = eigvec[:, order]
     for j in range(comps.shape[1]):
         if comps[np.argmax(np.abs(comps[:, j])), j] < 0:
@@ -98,8 +96,6 @@ def pca_project(
     emb: DataFrame,
     mean: np.ndarray,
     comps: np.ndarray,
-    vec_col: str = "embedding",
-    out_col: str = "pc",
 ) -> DataFrame:
     """Project vectors onto fitted components: (x − mean) @ W via an
     Arrow-batched matmul. mean/W are closure constants (d·k doubles —
@@ -117,7 +113,7 @@ def pca_project(
         out = (x - m) @ w
         return pd.Series(list(out))
 
-    return emb.withColumn(out_col, proj(F.col(vec_col)))
+    return emb.withColumn("pc", proj(F.col("embedding")))
 
 
 @register(
@@ -193,13 +189,11 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quantize_vectors(emb).orderBy("vec_id")
 
 
-def quantize_vectors(
-    emb: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
+def quantize_vectors(emb: DataFrame) -> DataFrame:
     """Scalar min/max quantization of a vector column (core of the
     registered `embedding_quantize` query; reusable on any frame)."""
-    mn = F.array_min(vec_col)
-    mx = F.array_max(vec_col)
+    mn = F.array_min("embedding")
+    mx = F.array_max("embedding")
     scale = (mx - mn) / float(QUANT_LEVELS)
 
     def code(x):
@@ -209,19 +203,19 @@ def quantize_vectors(
 
     codes = F.when(
         scale == 0,
-        F.transform(F.col(vec_col), lambda x: F.lit(0).cast("long")),
-    ).otherwise(F.transform(F.col(vec_col), code))
+        F.transform(F.col("embedding"), lambda x: F.lit(0).cast("long")),
+    ).otherwise(F.transform(F.col("embedding"), code))
     sq_err = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda x: F.pow(x - (mn + code(x) * scale), F.lit(2.0)),
     )
     mse = F.when(scale == 0, F.lit(0.0)).otherwise(
         F.aggregate(sq_err, F.lit(0.0), lambda acc, e: acc + e)
-        / F.size(vec_col)
+        / F.size("embedding")
     )
     return emb.select(
-        id_col,
-        F.size(vec_col).alias("n_dims"),
+        "vec_id",
+        F.size("embedding").alias("n_dims"),
         F.round(mn, 6).alias("v_min"),
         F.round(mx, 6).alias("v_max"),
         # Serialized (comma-joined) rather than array<bigint>: the external
@@ -240,14 +234,8 @@ PQ_M = 4   # subvectors per vector
 PQ_K = 16  # centroids per sub-codebook -> one byte-packable code each
 
 
-def pq_fit(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    m: int = PQ_M,
-    k: int = PQ_K,
-    id_col: str = "vec_id",
-) -> list[list[list[float]]] | None:
-    """Fit m per-subspace k-means codebooks (Jégou et al. 2011 PQ).
+def pq_fit(emb: DataFrame) -> list[list[list[float]]] | None:
+    """Fit PQ_M per-subspace k-means codebooks (Jégou et al. 2011 PQ).
 
     Size-adaptive like `clustering.kmeans_fit`: up to the local cap
     the vectors are collected ONCE and all m sub-codebooks fit
@@ -265,37 +253,33 @@ def pq_fit(
     )
 
     sample = (
-        emb.select(id_col, vec_col).limit(LOCAL_FIT_CAP + 1).collect()
+        emb.select("vec_id", "embedding").limit(LOCAL_FIT_CAP + 1).collect()
     )
     if not sample:
         return None
     d = len(sample[0][1])
-    assert d % m == 0, (d, m)
-    sub = d // m
+    assert d % PQ_M == 0, (d, PQ_M)
+    sub = d // PQ_M
     if len(sample) <= LOCAL_FIT_CAP:
         return [
             _kmeans_fit_local(
                 [(r[0], r[1][j * sub : (j + 1) * sub]) for r in sample],
-                k,
+                PQ_K,
                 ITERS,
             )
-            for j in range(m)
+            for j in range(PQ_M)
         ]
     books = []
-    for j in range(m):
+    for j in range(PQ_M):
         sv = emb.select(
-            F.col(id_col),
-            F.slice(F.col(vec_col), j * sub + 1, sub).alias("sv"),
+            F.col("vec_id"),
+            F.slice(F.col("embedding"), j * sub + 1, sub).alias("sv"),
         )
-        books.append(kmeans_fit(sv, "sv", k=k, id_col=id_col))
+        books.append(kmeans_fit(sv, "sv", k=PQ_K, id_col="vec_id"))
     return books
 
 
-def pq_encode(
-    emb: DataFrame,
-    books: list[list[list[float]]],
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(emb: DataFrame, books: list[list[list[float]]]) -> DataFrame:
     """codes[m] (argmin centroid per subspace) + reconstruction MSE via
     one Arrow-batched matmul per subspace; the codebooks are closure
     constants (k*d doubles — scale-independent broadcast)."""
@@ -326,7 +310,7 @@ def pq_encode(
             {"codes": list(codes), "mse": np.maximum(mse, 0.0)}
         )
 
-    return emb.withColumn("_pq", enc(F.col(vec_col)))
+    return emb.withColumn("_pq", enc(F.col("embedding")))
 
 
 def pq_fit_exact(
@@ -334,7 +318,6 @@ def pq_fit_exact(
     vec_col: str = "embedding",
     m: int = PQ_M,
     k: int = PQ_K,
-    id_col: str = "vec_id",
 ) -> list[list[list[int]]] | None:
     """pq_fit on the exact integer grid (r11 embedding_pq rows->oracle
     conversion): one `kmeans_fit_exact` per subvector slice, so every
@@ -347,7 +330,7 @@ def pq_fit_exact(
         kmeans_fit_exact,
     )
 
-    sample = emb.select(id_col, vec_col).limit(LOCAL_FIT_CAP + 1).collect()
+    sample = emb.select("vec_id", vec_col).limit(LOCAL_FIT_CAP + 1).collect()
     if not sample:
         return None
     d = len(sample[0][1])
@@ -365,10 +348,10 @@ def pq_fit_exact(
     books = []
     for j in range(m):
         sv = emb.select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.slice(F.col(vec_col), j * sub + 1, sub).alias("sv"),
         )
-        books.append(kmeans_fit_exact(sv, "sv", k=k, id_col=id_col))
+        books.append(kmeans_fit_exact(sv, "sv", k=k, id_col="vec_id"))
     return books
 
 

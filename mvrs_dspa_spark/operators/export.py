@@ -64,15 +64,13 @@ SEM_TAU = 0.4  # same threshold as embedding_near_dup's oracle baseline
 SEM_TARGET_CLUSTER_SIZE = 64
 
 
-def sem_k_for(
-    n_rows: int, target_cluster_size: int = SEM_TARGET_CLUSTER_SIZE
-) -> int:
+def sem_k_for(n_rows: int) -> int:
     """Cluster count so expected cluster size stays ~target.
 
     Keeps total within-cluster candidate pairs ~linear in n
     (n/target clusters x target^2 pairs) instead of n^2/k for a
     fixed k."""
-    return max(2, -(-n_rows // target_cluster_size))
+    return max(2, -(-n_rows // SEM_TARGET_CLUSTER_SIZE))
 
 
 @register(
@@ -319,11 +317,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def semantic_dedup_op(
     emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int | None = None,
-    iters: int = SEM_ITERS,
-    tau: float = SEM_TAU,
     exact: bool = False,
 ) -> DataFrame:
     """SemDeDup over any (id, vector) frame.
@@ -338,26 +332,26 @@ def semantic_dedup_op(
     if k is None:
         k = sem_k_for(emb.count())
     if exact:
-        cents_i = kmeans_fit_exact(emb, vec_col, k=k, iters=iters, id_col=id_col)
+        cents_i = kmeans_fit_exact(
+            emb, "embedding", k=k, iters=SEM_ITERS, id_col="vec_id"
+        )
         if not cents_i:
             return emb.sparkSession.createDataFrame(
                 [], "vec_id long, cluster int, keep boolean"
             )
-        assigned = assign_clusters_exact(emb, vec_col, cents_i).select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("embedding"),
-            "cluster",
+        assigned = assign_clusters_exact(emb, "embedding", cents_i).select(
+            "vec_id", "embedding", "cluster"
         )
     else:
-        centroids = kmeans_fit(emb, vec_col, k=k, iters=iters, id_col=id_col)
+        centroids = kmeans_fit(
+            emb, "embedding", k=k, iters=SEM_ITERS, id_col="vec_id"
+        )
         if not centroids:  # empty slice in -> empty result out
             return emb.sparkSession.createDataFrame(
                 [], "vec_id long, cluster int, keep boolean"
             )
-        assigned = assign_clusters(emb, vec_col, centroids).select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("embedding"),
-            "cluster",
+        assigned = assign_clusters(emb, "embedding", centroids).select(
+            "vec_id", "embedding", "cluster"
         )
     a, b = assigned.alias("a"), assigned.alias("b")
     # pair cosine via Arrow-batched numpy; the exact gate uses the
@@ -375,7 +369,7 @@ def semantic_dedup_op(
             & (F.col("a.vec_id") > F.col("b.vec_id")),
             "inner",
         )
-        .where(cos >= tau)
+        .where(cos >= SEM_TAU)
         .select(F.col("a.vec_id").alias("vec_id"))
         .distinct()
         .withColumn("keep", F.lit(False))

@@ -51,10 +51,10 @@ def _dir_bytes(spark: SparkSession, path: str) -> int:
 ZORDER_BITS = 16  # per-column resolution of the interleave key
 
 
-def zorder_key(df: DataFrame, cols: list[str], bits: int = ZORDER_BITS):
+def zorder_key(df: DataFrame, cols: list[str]):
     """Morton interleave key over numeric columns as a Column.
 
-    Each column is min/max-normalized to an unsigned `bits`-wide
+    Each column is min/max-normalized to an unsigned ZORDER_BITS-wide
     integer (one metadata-cheap agg supplies the bounds), then bit i
     of column j lands at position i*ncols + j of the key — the
     standard Z-order curve. Pure shift/and/or expressions: stays
@@ -70,19 +70,21 @@ def zorder_key(df: DataFrame, cols: list[str], bits: int = ZORDER_BITS):
         ]
     r = df.agg(*aggs).collect()[0]
 
-    top = (1 << bits) - 1
+    top = (1 << ZORDER_BITS) - 1
     scaled = []
     for c in cols:
         mn, mx = float(r[f"mn_{c}"]), float(r[f"mx_{c}"])
         span = (mx - mn) or 1.0
         v = F.floor(
-            (F.col(c).cast("double") - F.lit(mn)) / F.lit(span) * F.lit(1 << bits)
+            (F.col(c).cast("double") - F.lit(mn))
+            / F.lit(span)
+            * F.lit(1 << ZORDER_BITS)
         ).cast("long")
         scaled.append(F.greatest(F.lit(0), F.least(F.lit(top), v)))
 
     ncols = len(cols)
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         for j, v in enumerate(scaled):
             bit = F.shiftright(v, i).bitwiseAND(F.lit(1))
             z = z.bitwiseOR(F.shiftleft(bit, i * ncols + j))
@@ -96,7 +98,6 @@ def compact_parquet(
     target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
     cluster_by: list[str] | None = None,
     zorder_by: list[str] | None = None,
-    mode: str = "error",
 ) -> int:
     """Rewrite `in_path` into `out_path` as ~target-size parquet files.
 
@@ -125,7 +126,7 @@ def compact_parquet(
         out = df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
     else:
         out = df.repartition(n)
-    out.write.mode(mode).parquet(out_path)
+    out.write.mode("error").parquet(out_path)
     return n
 
 

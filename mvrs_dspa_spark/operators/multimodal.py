@@ -114,7 +114,7 @@ def extract_features(df: DataFrame, decode: str = "fake") -> DataFrame:
     )
 
 
-def sample_frames(df: DataFrame, every_n: int = 10, decode: str = "fake") -> DataFrame:
+def sample_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
     """video payload -> every_n-th frame payloads (explode-style stage).
 
     Demonstrates the 1->N mapInPandas shape (frame extraction, audio
@@ -124,8 +124,6 @@ def sample_frames(df: DataFrame, every_n: int = 10, decode: str = "fake") -> Dat
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if decode == "real":
-                raise NotImplementedError("real frame extraction needs ffmpeg")
             out_id, out_idx, out_payload = [], [], []
             for mid, payload, n_frames in zip(
                 pdf["media_id"], pdf["payload"], pdf["n_frames"]
@@ -198,25 +196,6 @@ def resize_images(
             schema="media_id long, payload binary, width int, height int",
         )
     )
-
-
-def with_arrow_batch_bound(df: DataFrame, max_records: int = 64) -> DataFrame:
-    """Repartition so Arrow batches of large payloads stay memory-bounded.
-
-    Production sets spark.sql.execution.arrow.maxRecordsPerBatch; this
-    helper additionally right-sizes partitions for payload-heavy scans
-    (a 128 MB parquet split of 5 MB payloads is ~25 rows — fine; a
-    row-group of small thumbnails can be 100k rows — not fine).
-    """
-    n = max(df.rdd.getNumPartitions(), 1)
-    approx_rows = df.sparkSession.conf.get(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"
-    )
-    if int(approx_rows) > max_records:
-        df.sparkSession.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(max_records)
-        )
-    return df.repartition(n)
 
 
 # --- driver-visible query over synthesized media ---------------------------

@@ -36,12 +36,11 @@ def bucketed_interval_join(
     key: str,
     left_ts: str,
     right_ts: str,
-    window_ms: int = WINDOW_MS,
 ) -> DataFrame:
     """Pairs where `right_ts` falls in `[left_ts - window, left_ts)`,
     as an equi-join on (key, time bucket). Inputs must not share other
     column names."""
-    w = F.lit(window_ms)
+    w = F.lit(WINDOW_MS)
     lb = F.unix_millis(F.col(left_ts))
     r = right.withColumn("_bucket", F.floor(F.unix_millis(F.col(right_ts)) / w))
     l = left.withColumn(
@@ -51,7 +50,7 @@ def bucketed_interval_join(
     return (
         l.join(r, [key, "_bucket"])
         .where(
-            (F.col(right_ts) >= F.col(left_ts) - F.expr(f"INTERVAL {window_ms // 1000} SECONDS"))
+            (F.col(right_ts) >= F.col(left_ts) - F.expr(f"INTERVAL {WINDOW_MS // 1000} SECONDS"))
             & (F.col(right_ts) < F.col(left_ts))
         )
         .drop("_bucket")

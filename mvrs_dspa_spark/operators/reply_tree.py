@@ -32,25 +32,22 @@ from mvrs_dspa_spark.plans.registry import register
 from mvrs_dspa_spark.tables import table
 
 
-def resolve_roots(
-    nodes: DataFrame,
-    id_col: str = "id",
-    parent_col: str = "parent_id",
-    max_rounds: int = 64,
-) -> DataFrame:
+def resolve_roots(nodes: DataFrame, max_rounds: int = 64) -> DataFrame:
     """Resolve every node to its root via pointer doubling.
 
-    `nodes` has one row per node with a nullable parent pointer.
+    `nodes` has one row per node (`id`) with a nullable `parent_id`.
     Returns (id, root_id, depth) for every node whose chain reaches a
     root (parent IS NULL); nodes whose chain hits a missing parent id
     (dangling replies, ref BuildReplyTreeProcessFunction.scala) are
     excluded, matching SQL WITH RECURSIVE semantics.
     """
     link = nodes.select(
-        F.col(id_col).alias("id"),
-        F.coalesce(F.col(parent_col), F.col(id_col)).alias("anc"),
-        F.when(F.col(parent_col).isNull(), F.lit(0)).otherwise(F.lit(1)).alias("depth"),
-        F.col(parent_col).isNull().alias("done"),
+        F.col("id"),
+        F.coalesce(F.col("parent_id"), F.col("id")).alias("anc"),
+        F.when(F.col("parent_id").isNull(), F.lit(0))
+        .otherwise(F.lit(1))
+        .alias("depth"),
+        F.col("parent_id").isNull().alias("done"),
         F.lit(False).alias("dangling"),
         # eager, NOT lazy: the per-round convergence check (isEmpty)
         # evaluates only a LIMIT-1 prefix, which does not fully

@@ -39,12 +39,7 @@ GATE_QUERY_TERMS = ("spark", "stream", "merge", "vector")
 TOP_N = 20
 
 
-def bm25_search(
-    spark: SparkSession,
-    sf_dir: str,
-    terms: tuple[str, ...] = GATE_QUERY_TERMS,
-    top_n: int = TOP_N,
-) -> DataFrame:
+def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 top-N over whitespace tokens (lowercased).
 
     Plan: scan → per-doc length, filter tokens to the query terms
@@ -60,7 +55,7 @@ def bm25_search(
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
     )
-    term_arr = F.array(*[F.lit(t) for t in terms])
+    term_arr = F.array(*[F.lit(t) for t in GATE_QUERY_TERMS])
     # the bounded posting relation (<= |terms| rows per doc) feeds the
     # df rollup and the scoring join inside bm25_from_postings —
     # materialized once, the corpus tokenize runs twice (stats needs
@@ -78,7 +73,7 @@ def bm25_search(
         .agg(F.count(F.lit(1)).alias("tf"))
         .localCheckpoint(eager=False)
     )
-    return bm25_from_postings(tf, stats, top_n)
+    return bm25_from_postings(tf, stats, TOP_N)
 
 
 def bm25_from_postings(

@@ -21,31 +21,33 @@ GAP_MINUTES = settings.sessions.gap_minutes  # ref-analog tunable
 GAP_US = GAP_MINUTES * 60_000_000
 
 
-def sessionize(df: DataFrame, key: str = "user_id", gap_us: int = GAP_US) -> DataFrame:
-    order = Window.partitionBy(key).orderBy("ts_us", "event_id")
-    base = df.select(F.col(key), F.unix_micros("ts").alias("ts_us"), "event_id", "value")
+def sessionize(df: DataFrame) -> DataFrame:
+    order = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
+    base = df.select(
+        F.col("user_id"), F.unix_micros("ts").alias("ts_us"), "event_id", "value"
+    )
     flagged = base.withColumn(
         "new_session",
         (
-            F.col("ts_us") - F.lag("ts_us").over(order) > F.lit(gap_us)
+            F.col("ts_us") - F.lag("ts_us").over(order) > F.lit(GAP_US)
         ).cast("int"),
     ).withColumn(
         "session_seq",
         F.sum(F.coalesce("new_session", F.lit(1))).over(
-            Window.partitionBy(key)
+            Window.partitionBy("user_id")
             .orderBy("ts_us", "event_id")
             .rowsBetween(Window.unboundedPreceding, 0)
         ),
     )
     return (
-        flagged.groupBy(key, "session_seq")
+        flagged.groupBy("user_id", "session_seq")
         .agg(
             F.timestamp_micros(F.min("ts_us")).alias("session_start"),
             F.timestamp_micros(F.max("ts_us")).alias("session_end"),
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 2).alias("total_value"),
         )
-        .orderBy(key, "session_seq")
+        .orderBy("user_id", "session_seq")
     )
 
 
@@ -284,7 +286,6 @@ def session_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 FUNNEL_HORIZON_US = 7 * 86_400_000_000  # 7 days between steps
-FUNNEL_STEPS = ("signup", "click", "purchase")
 
 
 @register(

@@ -27,9 +27,13 @@ from mvrs_dspa_spark.config import settings
 from mvrs_dspa_spark.functions import hashing as H
 from mvrs_dspa_spark.functions import minhash as MH
 from mvrs_dspa_spark.plans.registry import register
-from mvrs_dspa_spark.tables import PROPS_K_PATTERN, table
+from mvrs_dspa_spark.tables import (
+    EVENT_TYPES,
+    PROPS_K_PATTERN,
+    item_code_col,
+    table,
+)
 
-EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 # All five from the typed settings object (Settings.scala analog);
 # the oracle SQL below bakes the same values, so overrides keep the
 # two engines in lockstep.
@@ -70,25 +74,12 @@ def _items_df(
     ev = table(spark, sf_dir, "events").repartition(
         spark.sparkContext.defaultParallelism, "user_id"
     )
-    etype_idx = F.lit(None)
-    for i, t in enumerate(EVENT_TYPES):
-        etype_idx = F.when(F.col("event_type") == t, F.lit(i)).otherwise(etype_idx)
-    # props is the flat {"k": <scalar>} payload; extracting the k value
-    # token by regex instead of a full JSON parse halves this CPU-bound
-    # stage (interleaved A/B at sf0.1: 0.62 -> 0.41 s). The full-token
-    # pattern ([^,}"]+ then cast) keeps JSON-equivalent scalar
-    # semantics — "46.5" or "abc" still cast to NULL, never a partial
-    # numeric match (RE2 has no lookahead, so a digits-only pattern
-    # could not be mirrored safely in the oracle).
-    code = etype_idx.cast("long") * 1000 + F.nullif(
-        F.regexp_extract("props", _K_PATTERN, 1), F.lit("")
-    ).cast("long")
     # Null items (unparseable props.$.k or unknown event_type) are
     # excluded on BOTH engines: nulls never match an equi-join anyway,
     # and pinning the exclusion here keeps set sizes (and therefore
     # Jaccard denominators) identical between Spark's collect_set
     # (which drops nulls) and the DuckDB oracle's COUNT(*).
-    out = ev.select("user_id", code.alias("item")).where(
+    out = ev.select("user_id", item_code_col().alias("item")).where(
         F.col("item").isNotNull()
     )
     return out.distinct() if dedup else out
@@ -185,20 +176,6 @@ _KNOWN_SQL = f"""
 """
 
 
-def _active_users_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events")
-    cutoff = ev.select(
-        (F.unix_micros(F.max("ts")) - ACTIVE_DAYS * 86_400_000_000).alias("c")
-    )
-    return (
-        ev.groupBy("user_id")
-        .agg(F.unix_micros(F.max("ts")).alias("last_us"))
-        .crossJoin(F.broadcast(cutoff))
-        .where(F.col("last_us") >= F.col("c"))
-        .select("user_id")
-    )
-
-
 _ACTIVE_SQL = f"""
     SELECT user_id
     FROM (SELECT user_id, MAX(epoch_us(ts)) AS last_us FROM events GROUP BY user_id)
@@ -255,14 +232,8 @@ def similar_users_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").repartition(
         spark.sparkContext.defaultParallelism, "user_id"
     )
-    etype_idx = F.lit(None)
-    for i, t in enumerate(EVENT_TYPES):
-        etype_idx = F.when(F.col("event_type") == t, F.lit(i)).otherwise(etype_idx)
-    code = etype_idx.cast("long") * 1000 + F.nullif(
-        F.regexp_extract("props", _K_PATTERN, 1), F.lit("")
-    ).cast("long")  # regex k-extraction: see _items_df
     per_user = (
-        ev.select("user_id", code.alias("item"), "ts")
+        ev.select("user_id", item_code_col().alias("item"), "ts")
         .groupBy("user_id")
         .agg(
             F.collect_set("item").alias("items"),
@@ -829,7 +800,7 @@ _EDGES_CTE_SQL = f"""
 LPA_ROUNDS = 8
 
 
-def lpa_communities(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
+def lpa_communities(edges: DataFrame) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) over an
     undirected weighted edge list (src, dst, support): every node
     starts as its own community, then each round adopts the label
@@ -870,7 +841,7 @@ def lpa_communities(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     # each round; plain MAX partial-combines in a pure HashAggregate
     # (r11, guide §2.4 — same trap as the intrinsic-dim commit).
     _P, _H = "100000000000000000000", "50000000000000000000"
-    for _ in range(rounds):
+    for _ in range(LPA_ROUNDS):
         # labels is node-bounded: broadcast it so the (vocabulary-sized
         # but larger) edge list is never shuffled for the join
         # (r11, guide §3.1).
@@ -982,7 +953,7 @@ def modularity(edges: DataFrame, labels: DataFrame) -> float:
     return float(row[0].q) if row else 0.0
 
 
-def _lpa_sql(rounds: int = LPA_ROUNDS) -> str:
+def _lpa_sql() -> str:
     """The synchronous LPA rounds unrolled as MATERIALIZED CTEs (the
     kcore idiom), plus the exact-integer modularity of modularity_df
     — everything is integer counts, ROW_NUMBER tie-breaks, and ONE
@@ -998,7 +969,7 @@ def _lpa_sql(rounds: int = LPA_ROUNDS) -> str:
             SELECT DISTINCT src AS node, src AS community FROM de
         )""",
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, LPA_ROUNDS + 1):
         ctes.append(f"""n{r} AS (
             SELECT e.src, l.community, SUM(e.support) AS w
             FROM de e JOIN l{r - 1} l ON l.node = e.dst
@@ -1010,7 +981,7 @@ def _lpa_sql(rounds: int = LPA_ROUNDS) -> str:
                     PARTITION BY src ORDER BY w DESC, community) AS rn
                 FROM n{r}) WHERE rn = 1
         )""")
-    last = f"l{rounds}"
+    last = f"l{LPA_ROUNDS}"
     return (
         "WITH "
         + _EDGES_CTE_SQL

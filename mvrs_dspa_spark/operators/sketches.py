@@ -56,14 +56,14 @@ def _bucket_sql(code: str, j: int) -> str:
     return f"({H.affine_sql(code, a, b)} % {CMS_W})"
 
 
-def cms_sketch(toks: DataFrame, col: str = "t") -> DataFrame:
+def cms_sketch(toks: DataFrame) -> DataFrame:
     """(j, bucket, c) counter grid — at most D*W rows, any input size.
 
     The posexplode is map-side (xD narrow fan-out) and immediately
     collapsed by the partial aggregate into the D*W grid, so the one
     shuffle moves <= D*W rows per map partition.
     """
-    code = H.str_code_col(F.col(col))
+    code = H.str_code_col(F.col("t"))
     return (
         toks.select(
             F.posexplode(F.array(*_bucket_cols(code))).alias("j", "bucket")
@@ -685,12 +685,11 @@ THETA_K = 128
 _THETA_AB = H.hash_params(1, seed=5151)[0]
 
 
-def theta_code_col(user_id: Column | None = None) -> Column:
+def theta_code_col() -> Column:
     """The KMV hash — ONE definition shared by the registered batch
     query and the streaming sketch maintainer
     (streaming/theta_stream.ThetaMonitor)."""
-    u = F.col("user_id") if user_id is None else user_id
-    return H.affine_col(u, *_THETA_AB)
+    return H.affine_col(F.col("user_id"), *_THETA_AB)
 
 
 def theta_sketch_table(codes: DataFrame, exact: bool = True) -> DataFrame:
@@ -882,12 +881,12 @@ _td_compress, _td_quantile = _make_td_helpers()
 # floor(n * K_b + 0.5) — computed once per type, floor+0.5 rather
 # than ROUND because Spark's double ROUND allocates a BigDecimal
 # per evaluation — are bit-identical across engines.
-def _td_k_bounds(delta: int = TD_DELTA) -> list[float]:
+def _td_k_bounds() -> list[float]:
     import math
 
     return [
-        (math.sin(math.pi * (b / delta - 0.5)) + 1.0) / 2.0
-        for b in range(delta + 1)
+        (math.sin(math.pi * (b / TD_DELTA - 0.5)) + 1.0) / 2.0
+        for b in range(TD_DELTA + 1)
     ]
 
 

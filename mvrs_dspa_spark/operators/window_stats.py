@@ -27,7 +27,12 @@ from pyspark.sql import functions as F
 
 from mvrs_dspa_spark.config import settings
 from mvrs_dspa_spark.plans.registry import register
-from mvrs_dspa_spark.tables import props_k_col, props_k_sql, table
+from mvrs_dspa_spark.tables import (
+    EVENT_TYPES,
+    props_k_col,
+    props_k_sql,
+    table,
+)
 
 HOUR_US = 3_600_000_000
 
@@ -37,8 +42,6 @@ HOUR_US = 3_600_000_000
 # both the Spark plans and the oracle SQL bake the same values.
 SIZE_US = settings.activity.window_size_hours * HOUR_US
 SLIDE_US = settings.activity.window_slide_hours * HOUR_US
-
-EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
 
 def slide_windows(ts_us: F.Column, size_us: int, slide_us: int) -> F.Column:
@@ -55,27 +58,22 @@ def _slide_windows_sql(ts_us: str, size_us: int, slide_us: int) -> str:
     )
 
 
-def sliding_window_stats(
-    df: DataFrame,
-    key: str = "user_id",
-    size_us: int = SIZE_US,
-    slide_us: int = SLIDE_US,
-) -> DataFrame:
-    """Generic sliding-window activity stats per key (PostStatistics analog)."""
+def sliding_window_stats(df: DataFrame) -> DataFrame:
+    """Sliding-window activity stats per user (PostStatistics analog)."""
     base = df.select(
-        F.col(key),
+        F.col("user_id"),
         F.unix_micros("ts").alias("ts_us"),
         "event_type",
         "value",
         props_k_col().alias("k"),  # regex k-extraction: tables.PROPS_K_PATTERN
     )
     exploded = base.withColumn(
-        "ws_us", F.explode(slide_windows(F.col("ts_us"), size_us, slide_us))
+        "ws_us", F.explode(slide_windows(F.col("ts_us"), SIZE_US, SLIDE_US))
     )
     kind_counts = [
         F.count_if(F.col("event_type") == t).alias(f"n_{t}") for t in EVENT_TYPES
     ]
-    agg = exploded.groupBy(key, "ws_us").agg(
+    agg = exploded.groupBy("user_id", "ws_us").agg(
         F.count(F.lit(1)).alias("n_events"),
         *kind_counts,
         F.countDistinct("k").alias("n_distinct_keys"),
@@ -87,20 +85,20 @@ def sliding_window_stats(
     # new-user flag is a per-key analytic min over the already-reduced
     # rows — no per-user `firsts` table, no O(users) broadcast (the
     # round-2 shape; a forced-hint OOM at 100x).
-    first_ts_us = F.min("w_min_ts_us").over(W.partitionBy(key))
+    first_ts_us = F.min("w_min_ts_us").over(W.partitionBy("user_id"))
     return (
         agg.withColumn("first_ts_us", first_ts_us)
         .select(
-            F.col(key),
+            F.col("user_id"),
             F.timestamp_micros(F.col("ws_us")).alias("window_start"),
-            F.timestamp_micros(F.col("ws_us") + F.lit(size_us)).alias("window_end"),
+            F.timestamp_micros(F.col("ws_us") + F.lit(SIZE_US)).alias("window_end"),
             "n_events",
             *[f"n_{t}" for t in EVENT_TYPES],
             "n_distinct_keys",
             "total_value",
             (F.col("w_min_ts_us") == F.col("first_ts_us")).alias("new_user"),
         )
-        .orderBy(key, "window_start")
+        .orderBy("user_id", "window_start")
     )
 
 

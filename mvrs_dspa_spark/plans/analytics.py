@@ -1089,12 +1089,12 @@ def mad_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PSI_BINS = int((_HIST_HI - _HIST_LO) / _HIST_WIDTH)
 
 
-def psi_bucket_col(value: Column | None = None) -> Column:
+def psi_bucket_col() -> Column:
     """The PSI value-binning expression — ONE definition shared by the
     registered batch query and the streaming drift monitor
     (streaming/psi_stream.PsiMonitor), per the SPRT no-inline-twin
     rule (ADVICE r7)."""
-    v = F.col("value") if value is None else value
+    v = F.col("value")
     return F.least(
         F.greatest(F.floor((v - _HIST_LO) / _HIST_WIDTH), F.lit(0)),
         F.lit(_PSI_BINS - 1),
@@ -1255,12 +1255,11 @@ def value_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # integer-exact and the served statistics divide once at the end.
 
 
-def cusum_cents_col(value: Column | None = None) -> Column:
+def cusum_cents_col() -> Column:
     """The exact cent coding of CUSUM's value domain — ONE definition
     shared by the registered batch query and the streaming monitor
     (streaming/cusum_stream.CusumMonitor)."""
-    v = F.col("value") if value is None else value
-    return F.round(v * 100).cast("long")
+    return F.round(F.col("value") * 100).cast("long")
 
 
 def cusum_hourly_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1756,8 +1755,6 @@ def ab_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- shuffle-key skew advisor ----------------------------------------------
-
-_SKEW_KEYS = ("user_id", "event_type", "props_k")
 
 
 def _skew_branch_sql(key: str, expr: str) -> str:

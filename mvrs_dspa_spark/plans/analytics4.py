@@ -1065,12 +1065,11 @@ def session_path_markov_absorbing(
 # --- exact 1-D Wasserstein (earth mover) drift -----------------------------------
 
 
-def w1_cents_col(value: Column | None = None) -> Column:
+def w1_cents_col() -> Column:
     """The exact cent-grid coding of W1's value domain — ONE definition
     shared by the registered batch query and the streaming drift
     monitor (streaming/wasserstein_stream.WassersteinMonitor)."""
-    v = F.col("value") if value is None else value
-    return F.round(v * 100).cast("long")
+    return F.round(F.col("value") * 100).cast("long")
 
 
 def w1_from_cells(cells: DataFrame) -> DataFrame:

@@ -75,12 +75,11 @@ _RANK_GRID_SQL = """
         )"""
 
 
-def rank_cents_col(value: Column | None = None) -> Column:
+def rank_cents_col() -> Column:
     """The exact cent coding of the rank tests' value domain — ONE
     definition shared by the registered batch queries and the
     streaming rank-test monitor (streaming/ranktest_stream)."""
-    v = F.col("value") if value is None else value
-    return F.round(v * 100).cast("long")
+    return F.round(F.col("value") * 100).cast("long")
 
 
 def rank_stats_from_tgrid(

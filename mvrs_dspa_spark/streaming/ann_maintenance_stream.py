@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mvrs_dspa_spark.operators.ann import (
-    ANN_INCR_MOD,
     maintenance_cell_stats,
     maintenance_report_from_stats,
 )
@@ -40,13 +39,10 @@ class AnnMaintenanceMonitor(Monitor):
 
     STATE = {"state": (STATE_SCHEMA, "cluster")}
 
-    def __init__(
-        self, spark, cents: list[list[int]], mod: int = ANN_INCR_MOD
-    ) -> None:
+    def __init__(self, spark, cents: list[list[int]]) -> None:
         if not cents:
             raise ValueError("AnnMaintenanceMonitor needs a trained quantizer")
         self.cents = [[int(x) for x in c] for c in cents]
-        self.mod = mod
         super().__init__(spark)
 
     def _merged(self, delta: DataFrame) -> DataFrame:
@@ -55,7 +51,7 @@ class AnnMaintenanceMonitor(Monitor):
         )
 
     def step(self, batch_df: DataFrame) -> dict[str, DataFrame]:
-        delta = maintenance_cell_stats(batch_df, self.cents, self.mod)
+        delta = maintenance_cell_stats(batch_df, self.cents)
         return {"state": self._merged(delta)}
 
     def erase_vectors(self, vectors_df: DataFrame) -> None:
@@ -64,9 +60,7 @@ class AnnMaintenanceMonitor(Monitor):
         they accumulate."""
         if vectors_df.isEmpty():
             return
-        gone = maintenance_cell_stats(
-            vectors_df, self.cents, self.mod
-        ).select(
+        gone = maintenance_cell_stats(vectors_df, self.cents).select(
             "cluster",
             "is_base",
             (-F.col("n")).alias("n"),

@@ -25,26 +25,18 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from mvrs_dspa_spark.operators.ann import (
-    IVF_NPROBE,
-    TOP_K,
-    _cos_udf,
-    ivf_probe_udf,
-)
+from mvrs_dspa_spark.operators.ann import TOP_K, _cos_udf, ivf_probe_udf
 
 
 def streaming_ann_candidates(
-    queries: DataFrame,
-    index: DataFrame,
-    cents: list[list[float]],
-    nprobe: int = IVF_NPROBE,
+    queries: DataFrame, index: DataFrame, cents: list[list[float]]
 ) -> DataFrame:
     """Scored candidate stream: probe-cell explode -> stream-static
     equi-join on cluster -> exact cosine. Append-safe (stateless)."""
     probes = queries.select(
         F.col("query_id"),
         F.col("embedding").alias("q_emb"),
-        F.explode(ivf_probe_udf(cents, nprobe)("embedding")).alias("cluster"),
+        F.explode(ivf_probe_udf(cents)("embedding")).alias("cluster"),
     )
     return (
         probes.join(index, "cluster")
@@ -65,17 +57,15 @@ def run_streaming_ann(
     cents: list[list[float]],
     checkpoint_dir: str,
     sink: Callable[[DataFrame, int], None],
-    nprobe: int = IVF_NPROBE,
-    top_k: int = TOP_K,
 ) -> StreamingQuery:
-    """Start the serving job: per micro-batch, rank candidates top-k
+    """Start the serving job: per micro-batch, rank candidates TOP_K
     per query and hand the result to `sink(batch_df, batch_id)`.
 
     The rank runs inside foreachBatch because all of a query's
     candidates are produced in the micro-batch that carried the query
     — so the per-batch window is exact, with none of append-mode's
     watermark latency."""
-    cand = streaming_ann_candidates(queries, index, cents, nprobe)
+    cand = streaming_ann_candidates(queries, index, cents)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
@@ -83,7 +73,7 @@ def run_streaming_ann(
     def rank_and_sink(batch: DataFrame, batch_id: int) -> None:
         ranked = (
             batch.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= top_k)
+            .where(F.col("rn") <= TOP_K)
             .select("query_id", "neighbor_id", "cos_sim")
         )
         sink(ranked, batch_id)

@@ -50,10 +50,7 @@ class Bm25IndexMaintainer(Monitor):
         "doclen": (DOCLEN_SCHEMA, "doc_id"),
     }
 
-    def __init__(
-        self, spark, terms: tuple[str, ...] = GATE_QUERY_TERMS
-    ) -> None:
-        self.terms = tuple(terms)
+    def __init__(self, spark) -> None:
         self.n_docs = 0
         self.sum_dl = 0
         super().__init__(spark)
@@ -74,7 +71,7 @@ class Bm25IndexMaintainer(Monitor):
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.sum("dl"), F.lit(0)).alias("s"),
         ).collect()[0]
-        term_arr = F.array(*[F.lit(t) for t in self.terms])
+        term_arr = F.array(*[F.lit(t) for t in GATE_QUERY_TERMS])
         delta = (
             dl.select(
                 "doc_id",

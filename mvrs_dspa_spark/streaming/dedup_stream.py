@@ -222,22 +222,17 @@ def streaming_near_dup(
     )
 
 
-def batch_reference_near_dup(
-    docs: DataFrame,
-    n_hashes: int = N_HASHES,
-    bands: int = BANDS,
-    threshold: float = NEAR_DUP_SIM,
-) -> DataFrame:
+def batch_reference_near_dup(docs: DataFrame) -> DataFrame:
     """Batch twin of :func:`streaming_near_dup` for equivalence tests:
     per-pair (doc_id, dup_of, est_sim) where dup_of is earlier by
     (ts, doc_id), using the SAME signature expressions."""
-    params = H.hash_params(n_hashes, seed=SEED)
+    params = H.hash_params(N_HASHES, seed=SEED)
     sig = (
         docs.select("doc_id", "ts", shingle_codes_col(F.col("text")).alias("_sh"))
         .where(F.size("_sh") > 0)
         .select("doc_id", "ts", MH.signature_array_col("_sh", params).alias("sg"))
     )
-    banded = MH.bucket_rows_from_sig_df(sig, n_hashes, bands)
+    banded = MH.bucket_rows_from_sig_df(sig, N_HASHES, BANDS)
     a, b = banded.alias("a"), banded.alias("b")
     earlier = (F.col("b.ts") < F.col("a.ts")) | (
         (F.col("b.ts") == F.col("a.ts"))
@@ -251,11 +246,11 @@ def batch_reference_near_dup(
             & (F.col("a.bh") == F.col("b.bh"))
             & earlier,
         )
-        .where(match >= F.lit(threshold * n_hashes))
+        .where(match >= F.lit(NEAR_DUP_SIM * N_HASHES))
         .select(
             F.col("a.doc_id").alias("doc_id"),
             F.col("b.doc_id").alias("dup_of"),
-            F.round(match.cast("double") / n_hashes, 6).alias("est_sim"),
+            F.round(match.cast("double") / N_HASHES, 6).alias("est_sim"),
         )
         .groupBy("doc_id", "dup_of")
         .agg(F.max("est_sim").alias("est_sim"))

@@ -31,16 +31,14 @@ from mvrs_dspa_spark.operators.sketches import (
 )
 
 
-def hll_stream_registers(
-    events: DataFrame, group_col: str = "event_type", key_col: str = "user_id"
-) -> DataFrame:
+def hll_stream_registers(events: DataFrame) -> DataFrame:
     """(group, bucket, m_j) running register table over a stream.
 
     Same hashes as the batch `hll_registers` (bit-identical
     registers); keyed state bounded at |groups| x m rows. Use
     outputMode('complete') — no watermark needed, nothing is ever
     evicted, exactly like a production HLL rollup."""
-    code = H.str_code_col(F.col(key_col).cast("string"))
+    code = H.str_code_col(F.col("user_id").cast("string"))
     bucket = (H.affine_col(code, _HLL_A1, _HLL_B1) % F.lit(HLL_M)).cast("int")
     y = H.affine_col(code, _HLL_A2, _HLL_B2) % F.lit(1 << HLL_Y_BITS)
     bit_len = sum(
@@ -49,7 +47,7 @@ def hll_stream_registers(
     rho = (F.lit(HLL_Y_BITS + 1) - bit_len).cast("int")
     return (
         events.select(
-            F.col(group_col).alias("grp"),
+            F.col("event_type").alias("grp"),
             bucket.alias("bucket"),
             rho.alias("rho"),
         )

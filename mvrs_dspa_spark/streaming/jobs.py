@@ -35,9 +35,7 @@ from mvrs_dspa_spark.streaming.windowed import sliding_stats_stream
 def enrich_post_stats(
     stats: DataFrame,
     dim: DataFrame,
-    on: str = "user_id",
     defaults: dict[str, str] | None = None,
-    hint_broadcast: bool = True,
 ) -> DataFrame:
     """Enrich windowed stats with dimension metadata.
 
@@ -50,14 +48,11 @@ def enrich_post_stats(
     "<unknown content>"/"<unknown forum>" instead of dropping rows.
 
     The forced hint assumes the dimension fits executor memory (the
-    same assumption the reference's per-worker cache makes). For a
-    dimension that grows with the user population past that bound,
-    pass `hint_broadcast=False` — the stream-static join still works,
-    shuffled — or front a real lookup store.
+    same assumption the reference's per-worker cache makes). A
+    dimension that grows with the user population past that bound
+    needs a real lookup store in front.
     """
-    enriched = stats.join(
-        F.broadcast(dim) if hint_broadcast else dim, on, "left"
-    )
+    enriched = stats.join(F.broadcast(dim), "user_id", "left")
     for col, default in (defaults or {}).items():
         enriched = enriched.withColumn(col, F.coalesce(F.col(col), F.lit(default)))
     return enriched
@@ -67,8 +62,6 @@ def active_post_stats_job(
     events: DataFrame,
     sink_path: str,
     checkpoint: str,
-    size: str = "6 hours",
-    slide: str = "1 hour",
     watermark: str = "2 hours",
     dim: DataFrame | None = None,
     dim_defaults: dict[str, str] | None = None,
@@ -86,7 +79,7 @@ def active_post_stats_job(
     (STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE): start such a job from a
     fresh checkpoint.
     """
-    stats = sliding_stats_stream(events, size=size, slide=slide, watermark_delay=watermark)
+    stats = sliding_stats_stream(events, watermark_delay=watermark)
     if dim is not None:
         stats = enrich_post_stats(stats, dim, defaults=dim_defaults)
     return (
@@ -100,15 +93,9 @@ def active_post_stats_job(
 
 
 def _batch_items(batch: DataFrame) -> DataFrame:
-    from mvrs_dspa_spark.operators.similarity import EVENT_TYPES
+    from mvrs_dspa_spark.tables import item_code_col
 
-    etype_idx = F.lit(None)
-    for i, t in enumerate(EVENT_TYPES):
-        etype_idx = F.when(F.col("event_type") == t, F.lit(i)).otherwise(etype_idx)
-    from mvrs_dspa_spark.tables import props_k_col
-
-    code = etype_idx.cast("long") * 1000 + props_k_col().cast("long")
-    return batch.select("user_id", code.alias("item")).where(
+    return batch.select("user_id", item_code_col().alias("item")).where(
         F.col("item").isNotNull()
     ).distinct()
 
@@ -221,8 +208,6 @@ def conversion_attribution_job(
     events: DataFrame,
     sink_path: str,
     checkpoint: str,
-    within: str = "30 minutes",
-    window: str = "1 hour",
 ):
     """Click→purchase attribution with hourly conversion rollups — two
     CHAINED stateful operators (stream-stream interval join, then a
@@ -237,9 +222,9 @@ def conversion_attribution_job(
     click/purchase filters, so only click/purchase events advance
     event time — true of any filtered-stream topology.
     """
-    pairs = joins.click_purchase_stream_join(events, within=within)
+    pairs = joins.click_purchase_stream_join(events, within="30 minutes")
     stats = (
-        pairs.groupBy(F.window("purchase_ts", window).alias("w"))
+        pairs.groupBy(F.window("purchase_ts", "1 hour").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_conversions"),
             F.round(F.sum("purchase_value"), 2).alias("conversion_value"),
@@ -311,8 +296,6 @@ def streaming_curation(
 def streaming_curation_with_decontam(
     docs: DataFrame,
     benchmark_docs: DataFrame,
-    min_quality: float = 0.3,
-    watermark_delay: str = "10 minutes",
 ) -> DataFrame:
     """`streaming_curation` plus the benchmark-decontamination stage:
     docs sharing any 8-token n-gram with the (static) benchmark set
@@ -354,5 +337,5 @@ def streaming_curation_with_decontam(
     )
     clean = docs.where(~contaminated)
     return streaming_curation(
-        clean, min_quality=min_quality, watermark_delay=watermark_delay
+        clean, min_quality=0.3, watermark_delay="10 minutes"
     )

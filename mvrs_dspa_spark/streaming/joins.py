@@ -31,13 +31,12 @@ def interval_join(
     upper: str = "30 minutes",
     left_watermark: str = "1 hour",
     right_watermark: str = "1 hour",
-    right_suffix: str = "_r",
     how: str = "inner",
 ) -> DataFrame:
     """Join right rows with `r.ts` in `[l.ts + lower, l.ts + upper]`.
 
     Both inputs must carry a `ts` timestamp column and the `on` key.
-    Right-side non-key columns come back suffixed. Supported `how`:
+    Right-side non-key columns come back suffixed `_r`. Supported `how`:
     inner (emits on match) and leftOuter (left row emits with nulls
     once the right watermark passes its upper bound).
     """
@@ -48,19 +47,19 @@ def interval_join(
             "right rows; express those as interval_join(right, left, ...)"
         )
     r_cols = [
-        F.col(c).alias(c if c == on else f"{c}{right_suffix}")
+        F.col(c).alias(c if c == on else f"{c}_r")
         for c in right.columns
     ]
     l = left.withWatermark("ts", left_watermark).alias("l")
-    r = right.select(*r_cols).withWatermark(f"ts{right_suffix}", right_watermark).alias("r")
+    r = right.select(*r_cols).withWatermark("ts_r", right_watermark).alias("r")
     cond = (
         (F.col(f"l.{on}") == F.col(f"r.{on}"))
         & (
-            F.col(f"r.ts{right_suffix}")
+            F.col("r.ts_r")
             >= F.col("l.ts") + F.expr(f"INTERVAL {lower}")
         )
         & (
-            F.col(f"r.ts{right_suffix}")
+            F.col("r.ts_r")
             <= F.col("l.ts") + F.expr(f"INTERVAL {upper}")
         )
     )
@@ -70,7 +69,7 @@ def interval_join(
 
 
 def click_purchase_stream_join(
-    events: DataFrame, within: str = "30 minutes", watermark: str = "1 hour"
+    events: DataFrame, within: str = "30 minutes"
 ) -> DataFrame:
     """Clicks followed by a purchase from the same user within `within`
     — the streaming twin of the batch as-of join
@@ -88,8 +87,8 @@ def click_purchase_stream_join(
         on="user_id",
         lower="0 seconds",
         upper=within,
-        left_watermark=watermark,
-        right_watermark=watermark,
+        left_watermark="1 hour",
+        right_watermark="1 hour",
     )
     return out.select(
         F.col("user_id"),
@@ -101,12 +100,8 @@ def click_purchase_stream_join(
     )
 
 
-def dedup_stream(
-    events: DataFrame,
-    keys: tuple[str, ...] = ("event_id",),
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """One row per `keys` while duplicates can still arrive.
+def dedup_stream(events: DataFrame) -> DataFrame:
+    """One row per `event_id` while duplicates can still arrive.
 
     State for a key is dropped once the watermark passes its event
     time, bounding the store; a duplicate arriving later than the
@@ -114,6 +109,6 @@ def dedup_stream(
     tradeoff — same contract as the reference's keyed first-seen
     state with a cleanup timer).
     """
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        list(keys)
+    return events.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
+        ["event_id"]
     )

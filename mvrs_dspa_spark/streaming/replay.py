@@ -25,39 +25,36 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_SEED = 137  # reference ScaledReplayFunction.scala:70 (rand seed)
-
 from mvrs_dspa_spark.config import settings
 
-# ref application.conf data.speedup-factor / data.random-delay
+DEFAULT_SEED = 137  # reference ScaledReplayFunction.scala:70 (rand seed)
+# ref application.conf data.speedup-factor
 DEFAULT_SPEEDUP = settings.data.speedup_factor
-DEFAULT_MAX_DELAY_MS = settings.data.random_delay_minutes * 60_000
 
 
 def replay_schedule(
     df: DataFrame,
-    ts_col: str = "ts",
-    id_col: str = "event_id",
     speedup: float = DEFAULT_SPEEDUP,
     max_delay_ms: int = 0,
     seed: int = DEFAULT_SEED,
 ) -> DataFrame:
-    """Attach deterministic replay emission offsets to an event table.
+    """Attach deterministic replay emission offsets to an event table
+    (``ts``, ``event_id``).
 
     Adds:
     - ``delay_ms``: hash-uniform in [0, max_delay_ms], keyed on
-      (id_col, seed) — same event always gets the same delay;
+      (event_id, seed) — same event always gets the same delay;
     - ``emit_offset_ms``: wall-clock ms after replay start at which the
       event is emitted = (event_time - first_event_time + delay) / speedup.
 
     The min-timestamp is joined back via broadcast (no driver collect),
     so the schedule is a single distributed plan at any scale.
     """
-    ts_ms = F.unix_millis(F.col(ts_col))
+    ts_ms = F.unix_millis(F.col("ts"))
     delay = (
         F.lit(0).cast("long")
         if max_delay_ms <= 0
-        else F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(max_delay_ms + 1))
+        else F.pmod(F.xxhash64(F.col("event_id"), F.lit(seed)), F.lit(max_delay_ms + 1))
     )
     t0 = df.agg(F.min(ts_ms).alias("t0_ms"))
     return (
@@ -77,11 +74,8 @@ def write_replay_batches(
     df: DataFrame,
     out_dir: str,
     n_batches: int = 4,
-    ts_col: str = "ts",
-    id_col: str = "event_id",
     speedup: float = DEFAULT_SPEEDUP,
     max_delay_ms: int = 0,
-    seed: int = DEFAULT_SEED,
 ) -> list[str]:
     """Materialize the replay as ordered micro-batch parquet files.
 
@@ -91,7 +85,7 @@ def write_replay_batches(
     with ``maxFilesPerTrigger=1`` replays them as distinct
     micro-batches in schedule order. Returns the batch paths.
     """
-    sched = replay_schedule(df, ts_col, id_col, speedup, max_delay_ms, seed).cache()
+    sched = replay_schedule(df, speedup, max_delay_ms).cache()
     try:
         hi = sched.agg(F.max("emit_offset_ms")).first()[0] or 0
         width = max(1, (hi + n_batches) // n_batches)
@@ -124,11 +118,7 @@ def read_replay_stream(spark, out_dir: str, schema) -> DataFrame:
 def replay_rate_aligned(
     spark,
     df: DataFrame,
-    ts_col: str = "ts",
-    id_col: str = "event_id",
     speedup: float = DEFAULT_SPEEDUP,
-    max_delay_ms: int = 0,
-    seed: int = DEFAULT_SEED,
     ticks_per_second: int = 10,
 ) -> DataFrame:
     """Wall-clock-paced replay: events stream out as real time passes.
@@ -145,7 +135,7 @@ def replay_rate_aligned(
     Returns a streaming DataFrame with the original columns; the rate
     stream's processing timestamp rides along as `emitted_at`.
     """
-    sched = replay_schedule(df, ts_col, id_col, speedup, max_delay_ms, seed)
+    sched = replay_schedule(df, speedup)
     tick_of_event = (F.col("emit_offset_ms") * ticks_per_second / 1000).cast("long")
     scheduled = sched.withColumn("tick", tick_of_event).drop(
         "delay_ms", "emit_offset_ms"

@@ -39,15 +39,11 @@ class ReservoirMonitor(Monitor):
 
     STATE = {"state": (STATE_SCHEMA, None)}
 
-    def __init__(self, spark, k: int = RESERVOIR_K) -> None:
-        self.k = k
-        super().__init__(spark)
-
     def _prune(self, df: DataFrame) -> DataFrame:
         w = Window.orderBy("priority", "event_id")
         return (
             df.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= self.k)
+            .where(F.col("rn") <= RESERVOIR_K)
             .drop("rn")
         )
 

@@ -27,12 +27,12 @@ from mvrs_dspa_spark.functions import text as T
 from mvrs_dspa_spark.operators.sketches import _bucket_cols
 
 
-def cms_stream_cells(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def cms_stream_cells(docs: DataFrame) -> DataFrame:
     """(j, bucket, c) running counter grid over a streaming document
     source. Narrow explode (tokens, then xD bucket fan-out) feeding a
     bounded-key streaming aggregate; use outputMode('complete')."""
     toks = docs.select(
-        F.explode(T.tokens_col(F.col(text_col))).alias("t")
+        F.explode(T.tokens_col(F.col("text"))).alias("t")
     )
     code = H.str_code_col(F.col("t"))
     return (

@@ -120,11 +120,7 @@ def kafka_stream(
 
 
 def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    fmt: str = "parquet",
-    mode: str = "overwrite",
+    df: DataFrame, path: str, partition_cols: list[str]
 ) -> None:
     """Hive-style partitioned layout — the 100 TB table format.
 
@@ -137,31 +133,18 @@ def write_partitioned(
     tasks × partitions small files, the classic metadata killer.  With
     it each partition's data lands in one task = one file.
     """
-    if fmt not in _BATCH_FORMATS:
-        raise ValueError(f"unsupported format {fmt!r}")
     (
         df.repartition(*[F.col(c) for c in partition_cols])
         .write.partitionBy(*partition_cols)
-        .mode(mode)
-        .format(fmt)
-        .save(path)
+        .mode("overwrite")
+        .parquet(path)
     )
 
 
-def read_partitioned(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    schema: StructType | str | None = None,
-) -> DataFrame:
-    """Read a partitioned layout; partition columns come back as
-    regular columns and literal filters on them prune directories."""
-    if fmt not in _BATCH_FORMATS:
-        raise ValueError(f"unsupported format {fmt!r}")
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.format(fmt).load(path)
+def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
+    """Read a partitioned parquet layout; partition columns come back
+    as regular columns and literal filters on them prune directories."""
+    return spark.read.parquet(path)
 
 
 # ---------------------------------------------------------------------------
@@ -202,10 +185,10 @@ def encode_json(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
-def decode_json(df: DataFrame, schema: StructType | str, value_col: str = "value") -> DataFrame:
+def decode_json(df: DataFrame, schema: StructType | str) -> DataFrame:
     """Unpack a JSON `value` binary column back into typed columns."""
     return df.select(
-        F.from_json(F.col(value_col).cast("string"), schema, _JSON_TS_OPTS).alias("r")
+        F.from_json(F.col("value").cast("string"), schema, _JSON_TS_OPTS).alias("r")
     ).select("r.*")
 
 
@@ -236,14 +219,14 @@ def encode_avro(df: DataFrame, cols: list[str], schema: str) -> DataFrame:
     return df.select(to_avro(F.struct(*cols), schema).alias("value"))
 
 
-def decode_avro(df: DataFrame, schema: str, value_col: str = "value") -> DataFrame:
+def decode_avro(df: DataFrame, schema: str) -> DataFrame:
     """Unpack an Avro `value` binary column back into typed columns
     (Kafka source shape: `kafka_stream(...).transform(decode_avro, ...)`)."""
     from pyspark.sql import functions as F
     from pyspark.sql.avro.functions import from_avro
 
     _require_avro(df.sparkSession)
-    return df.select(from_avro(F.col(value_col), schema).alias("r")).select("r.*")
+    return df.select(from_avro(F.col("value"), schema).alias("r")).select("r.*")
 
 
 def _require_avro(spark: SparkSession) -> None:
@@ -271,12 +254,12 @@ def parquet_sink(df: DataFrame, path: str, checkpoint: str, **kwargs):
     )
 
 
-def memory_sink(df: DataFrame, name: str, output_mode: str = "append"):
+def memory_sink(df: DataFrame, name: str):
     """In-memory table sink (tests/debug only — driver-resident)."""
     return (
         df.writeStream.format("memory")
         .queryName(name)
-        .outputMode(output_mode)
+        .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
@@ -334,7 +317,6 @@ def elastic_sink(
     nodes: str | None,
     index: str,
     checkpoint: str,
-    doc_id_col: str | None = None,
 ):
     """Streaming ES sink; raises a clear error when the connector is absent."""
     if not elastic_available(df.sparkSession):
@@ -344,7 +326,7 @@ def elastic_sink(
         )
     return (
         df.writeStream.format("org.elasticsearch.spark.sql")
-        .options(**elastic_sink_options(nodes, index, doc_id_col))
+        .options(**elastic_sink_options(nodes, index))
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
         .trigger(availableNow=True)

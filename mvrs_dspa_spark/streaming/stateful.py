@@ -136,19 +136,16 @@ def _bucket_window_fn(size_ms: int, slide_ms: int):
 
 def bucketed_sliding_stats(
     events: DataFrame,
-    size_ms: int = 6 * HOUR_MS,
-    slide_ms: int = HOUR_MS,
     watermark_delay: str = "2 hours",
 ) -> DataFrame:
-    """Sliding per-user window stats with O(size/slide) state per key."""
-    if size_ms % slide_ms:
-        raise ValueError("size must be a multiple of slide")
+    """Sliding per-user window stats (6 h windows sliding hourly) with
+    O(size/slide) state per key."""
     return (
         events.select("user_id", "ts", "value")
         .withWatermark("ts", watermark_delay)
         .groupBy("user_id")
         .applyInPandasWithState(
-            _bucket_window_fn(size_ms, slide_ms),
+            _bucket_window_fn(6 * HOUR_MS, HOUR_MS),
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",

@@ -35,11 +35,12 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from mvrs_dspa_spark.tables import EVENT_TYPES
+
 _MASK = (1 << 63) - 1
 _LCG_A = 6_364_136_223_846_793_005
 _LCG_C = 1_442_695_040_888_963_407
 
-EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 SCHEMA_DDL = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"

@@ -50,7 +50,6 @@ def measure_stream_throughput(
     files_per_trigger: int = 2,
     synthetic_rows: int = 100_000,
     rows_per_batch: int = 25_000,
-    timeout_s: int = 120,
     state_partitions: int | None = None,
 ) -> dict:
     """Run the bounded stream to completion; return a progress summary.
@@ -134,7 +133,7 @@ def measure_stream_throughput(
             q.processAllAvailable()
         finally:
             q.stop()
-            q.awaitTermination(timeout_s)
+            q.awaitTermination(120)
         # the listener bus is async; terminated-event delivery bounds
         # progress-event delivery for this query id
         deadline = time.monotonic() + 10.0

@@ -39,16 +39,12 @@ def windowed_key_counts(
     events: DataFrame,
     key: str = "event_type",
     size: str = "1 hour",
-    slide: str | None = None,
     watermark_delay: str = "30 minutes",
 ) -> DataFrame:
     """Watermarked per-(window, key) counts, append mode (final rows)."""
-    win = (
-        F.window("ts", size, slide) if slide else F.window("ts", size)
-    )
     return (
         events.withWatermark("ts", watermark_delay)
-        .groupBy(win.alias("w"), F.col(key))
+        .groupBy(F.window("ts", size).alias("w"), F.col(key))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 2).alias("total_value"),
@@ -98,7 +94,6 @@ def trending_topk_job(
     events: DataFrame,
     out_dir: str,
     checkpoint: str,
-    key: str = "event_type",
     k: int = 3,
     size: str = "1 hour",
     watermark_delay: str = "30 minutes",
@@ -106,10 +101,12 @@ def trending_topk_job(
     """Continuous trending-keys job: windowed counts -> finalized-window
     top-K -> idempotent parquet partitions. Returns the started query."""
     counts = windowed_key_counts(
-        events, key=key, size=size, watermark_delay=watermark_delay
+        events, key="event_type", size=size, watermark_delay=watermark_delay
     )
     return (
-        counts.writeStream.foreachBatch(idempotent_batch_writer(out_dir, key, k))
+        counts.writeStream.foreachBatch(
+            idempotent_batch_writer(out_dir, "event_type", k)
+        )
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
         .start()

@@ -22,41 +22,43 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
+from mvrs_dspa_spark.config import settings
+from mvrs_dspa_spark.tables import EVENT_TYPES
+
+# the batch twins' settings (window_stats.SIZE_US/SLIDE_US,
+# sessionize.GAP_MINUTES), spelled as Spark interval strings
+SIZE = f"{settings.activity.window_size_hours} hours"
+SLIDE = f"{settings.activity.window_slide_hours} hours"
+GAP = f"{settings.sessions.gap_minutes} minutes"
 
 
 def sliding_stats_stream(
     events: DataFrame,
-    key: str = "user_id",
-    size: str = "6 hours",
-    slide: str = "1 hour",
+    size: str = SIZE,
+    slide: str = SLIDE,
     watermark_delay: str = "2 hours",
 ) -> DataFrame:
-    """Per-key sliding-window activity stats over a streaming DataFrame.
+    """Per-user sliding-window activity stats over a streaming DataFrame.
 
-    Append output mode: a (key, window) row is emitted exactly once,
+    Append output mode: a (user, window) row is emitted exactly once,
     when the watermark passes window end — the reference's
     window-fire-at-watermark behavior.
 
-    `n_users_approx` counts the distinct users of each (window, key)
-    group. Grouped by `user_id` that is exact and needs no sketch: 1
-    for every user, 0 for the null-user group (`count` skips nulls).
-    The HLL++ sketch is kept only for other keys, because it is an
-    `ImperativeAggregate`: one in the aggregation turns off whole-stage
-    codegen for every `HashAggregate` of the stateful chain (partial,
-    state restore, state save, final), and its 52-long buffer is stored
-    in every state row.
+    `n_users_approx` is `(count(user_id) > 0)`: 1 for every user, 0
+    for the null-user group (`count` skips nulls). It is exact and
+    keeps every aggregate declarative; an HLL++ sketch here would be
+    an `ImperativeAggregate`, which turns off whole-stage codegen for
+    every `HashAggregate` of the stateful chain (partial, state
+    restore, state save, final) and stores its 52-long buffer in every
+    state row.
     """
     kind_counts = [
         F.count_if(F.col("event_type") == t).alias(f"n_{t}") for t in EVENT_TYPES
     ]
-    if key == "user_id":
-        n_users = (F.count("user_id") > 0).cast("long")
-    else:
-        n_users = F.approx_count_distinct("user_id")
+    n_users = (F.count("user_id") > 0).cast("long")
     return (
         events.withWatermark("ts", watermark_delay)
-        .groupBy(F.window("ts", size, slide).alias("w"), F.col(key))
+        .groupBy(F.window("ts", size, slide).alias("w"), F.col("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             *kind_counts,
@@ -66,7 +68,7 @@ def sliding_stats_stream(
         .select(
             F.col("w.start").alias("window_start"),
             F.col("w.end").alias("window_end"),
-            key,
+            "user_id",
             "n_events",
             *[f"n_{t}" for t in EVENT_TYPES],
             "n_users_approx",
@@ -98,10 +100,7 @@ def tumbling_rollup_stream(
 
 
 def session_stats_stream(
-    events: DataFrame,
-    key: str = "user_id",
-    gap: str = "30 minutes",
-    watermark_delay: str = "2 hours",
+    events: DataFrame, gap: str = GAP, watermark_delay: str = "2 hours"
 ) -> DataFrame:
     """Streaming gap-based sessionization (batch analog:
     operators/sessionize.user_sessions).
@@ -113,7 +112,7 @@ def session_stats_stream(
     """
     return (
         events.withWatermark("ts", watermark_delay)
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col(key))
+        .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 2).alias("total_value"),
@@ -121,7 +120,7 @@ def session_stats_stream(
         .select(
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),
-            key,
+            "user_id",
             "n_events",
             "total_value",
         )

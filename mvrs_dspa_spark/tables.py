@@ -37,8 +37,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def _ensure_session_configs(spark: SparkSession) -> None:
     """Make reads work under ANY caller-supplied session, not just ours.
@@ -165,16 +163,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql() use."""
-    for name in TABLE_NAMES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 # --- events.props "k" extraction -------------------------------------------
 #
 # props is the flat {"k": <scalar>} JSON payload. Extracting the k
@@ -201,3 +189,21 @@ def props_k_col():
 
 def props_k_sql() -> str:
     return f"NULLIF(regexp_extract(props, '{PROPS_K_PATTERN}', 1), '')"
+
+
+# --- events item code -------------------------------------------------------
+#
+# An "item" is an (event_type, props.k) pair coded as one long:
+# event-type index x 1000 + k. An unknown event type or unparseable k
+# gives NULL, which callers drop.
+
+EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
+
+
+def item_code_col():
+    from pyspark.sql import functions as F
+
+    etype_idx = F.lit(None)
+    for i, t in enumerate(EVENT_TYPES):
+        etype_idx = F.when(F.col("event_type") == t, F.lit(i)).otherwise(etype_idx)
+    return etype_idx.cast("long") * 1000 + props_k_col().cast("long")

@@ -51,7 +51,7 @@ def test_same_definition_batch_and_stream_agree(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     stream_rows = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
         for r in spark.sql("SELECT * FROM unify").collect()
@@ -148,7 +148,7 @@ def test_streaming_curation_matches_batch_semantics(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     out = spark.table("curation_out").collect()
     got = {r["doc_id"] for r in out}
 
@@ -205,6 +205,6 @@ def test_streaming_curation_decontaminates_against_benchmark(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = {r["doc_id"] for r in spark.table("dc_out").collect()}
     assert got == {1, 3}

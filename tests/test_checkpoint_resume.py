@@ -38,14 +38,14 @@ def test_restart_from_checkpoint_no_duplicates(spark, tmp_path):
     _write(spark, src, 0, 50)
     stream = sources.read_stream(spark, src, "parquet", SCHEMA)
     q1 = sources.parquet_sink(stream, out, ckpt)
-    q1.awaitTermination(120)
+    assert q1.awaitTermination(120)
     assert spark.read.parquet(out).count() == 50
 
     # run 2: new rows land, a NEW query resumes from the same checkpoint
     _write(spark, src, 50, 80)
     stream2 = sources.read_stream(spark, src, "parquet", SCHEMA)
     q2 = sources.parquet_sink(stream2, out, ckpt)
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
 
     got = sorted(r.id for r in spark.read.parquet(out).collect())
     assert got == list(range(80)), "resume must add only new rows, exactly once"

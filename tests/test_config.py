@@ -63,14 +63,26 @@ def test_unknown_keys_rejected(tmp_path):
     cfg.write_text(json.dumps({"sessions": {"gap_minuets": 45}}))
     with pytest.raises(ValueError, match="unknown config key"):
         load_settings(path=str(cfg))
+    # data fields nothing read were removed, not silently ignored
+    for key in ("random_delay_minutes", "max_out_of_orderness_minutes"):
+        cfg.write_text(json.dumps({"data": {key: 30}}))
+        with pytest.raises(ValueError, match="unknown config key"):
+            load_settings(path=str(cfg))
     cfg.write_text(json.dumps({"sesions": {"gap_minutes": 45}}))
     with pytest.raises(ValueError, match="unknown config section"):
         load_settings(path=str(cfg))
 
 
+def _default(fn, param):
+    import inspect
+
+    return inspect.signature(fn).parameters[param].default
+
+
 def test_modules_read_from_settings():
     from mvrs_dspa_spark.config import settings
     from mvrs_dspa_spark.operators import sessionize, similarity, window_stats
+    from mvrs_dspa_spark.streaming import windowed
 
     assert sessionize.GAP_MINUTES == settings.sessions.gap_minutes
     assert (
@@ -78,6 +90,17 @@ def test_modules_read_from_settings():
         == settings.activity.window_size_hours * window_stats.HOUR_US
     )
     assert similarity.TOP_N == settings.recommendation.max_recommendation_count
+    # the stream builders default to their batch twins' settings
+    act = settings.activity
+    assert _default(windowed.sliding_stats_stream, "size") == (
+        f"{act.window_size_hours} hours"
+    )
+    assert _default(windowed.sliding_stats_stream, "slide") == (
+        f"{act.window_slide_hours} hours"
+    )
+    assert _default(windowed.session_stats_stream, "gap") == (
+        f"{settings.sessions.gap_minutes} minutes"
+    )
 
 
 _SUBPROC = """
@@ -90,6 +113,13 @@ assert settings.activity.window_size_hours == 3
 from mvrs_dspa_spark.operators import sessionize, window_stats
 assert sessionize.GAP_US == 7 * 60_000_000
 assert window_stats.SIZE_US == 3 * window_stats.HOUR_US
+
+import inspect
+from mvrs_dspa_spark.streaming import windowed
+sig = inspect.signature(windowed.sliding_stats_stream).parameters
+assert sig["size"].default == "3 hours", sig["size"].default
+sig = inspect.signature(windowed.session_stats_stream).parameters
+assert sig["gap"].default == "7 minutes", sig["gap"].default
 
 from mvrs_dspa_spark.session import get_spark
 from tests.oracle_harness import compare

@@ -39,7 +39,7 @@ def test_csv_stream_to_parquet_sink(spark, tmp_path):
     stream = sources.read_stream(spark, src, "csv", SCHEMA, max_files_per_trigger=1)
     out, ckpt = str(tmp_path / "pq_out"), str(tmp_path / "ckpt")
     q = sources.parquet_sink(stream, out, ckpt)
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     assert spark.read.parquet(out).count() == 20
 
 
@@ -84,13 +84,13 @@ def test_local_index_sink_upserts_by_id(spark, tmp_path):
     idx = str(tmp_path / "es_index")
     stream = sources.read_stream(spark, src, "csv", SCHEMA)
     q = sources.local_index_sink(stream, idx, "id", str(tmp_path / "ck1"))
-    q.awaitTermination(60)
+    assert q.awaitTermination(60)
     # second batch: overwrite id=2, add id=3 — resuming from the SAME
     # checkpoint, so only the new file forms the (later) micro-batch
     df2 = spark.createDataFrame([(2, "b2", 2.5), (3, "c", 3.0)], SCHEMA)
     df2.coalesce(1).write.option("header", "true").mode("append").csv(src)
     q2 = sources.local_index_sink(stream, idx, "id", str(tmp_path / "ck1"))
-    q2.awaitTermination(60)
+    assert q2.awaitTermination(60)
     with open(f"{idx}/index.jsonl") as fh:
         docs = {d["id"]: d for d in map(json.loads, fh)}
     assert set(docs) == {1, 2, 3}
@@ -109,7 +109,7 @@ def test_progress_monitor_and_observe(spark, sf_small, tmp_path):
             stream, "progress", F.sum("value").alias("sum_v")
         )
         q = sources.memory_sink(observed, "obs_out")
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         # listener bus is async; poll briefly
         for _ in range(60):
             if mon.total_input_rows() >= 50 and mon.terminated:

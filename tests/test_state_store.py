@@ -33,7 +33,7 @@ def test_rocksdb_state_store_runs(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         ops = [op for p in q.recentProgress for op in p["stateOperators"]]
         assert ops, "no stateful operator progress recorded"
         assert any(

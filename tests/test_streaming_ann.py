@@ -56,7 +56,7 @@ def test_streaming_ann_matches_batch_ivf(spark, sf_small, tmp_path):
         )
 
     q = run_streaming_ann(stream, index, cents, str(tmp_path / "ck"), sink)
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     want = {
         (r["query_id"], r["neighbor_id"], r["cos_sim"])

@@ -86,7 +86,7 @@ def _run_stream(spark, tmp_path, rows, n_files, **kw):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     pairs = (
         spark.table(name)
         .groupBy("doc_id", "dup_of")

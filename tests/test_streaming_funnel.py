@@ -81,7 +81,7 @@ def _run(spark, tmp_path, rows, n_files=4, shuffle_within_file=True):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = spark.table("funnel_out").collect()
     return {r.user_id: (r.t1_us, r.t2_us, r.t3_us) for r in got}, got
 

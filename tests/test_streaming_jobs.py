@@ -29,7 +29,7 @@ def test_active_post_stats_job(spark, sf_small, tmp_path):
         checkpoint=str(tmp_path / "stats_ckpt"),
         watermark="1 hour",
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     out = spark.read.parquet(str(tmp_path / "stats_out"))
     assert out.count() > 0
     cols = set(out.columns)
@@ -46,7 +46,7 @@ def test_recommendations_job(spark, sf_small, tmp_path):
         batches.append((batch_id, df.collect()))
 
     q = recommendations_job(stream, sink, str(tmp_path / "rec_ckpt"))
-    q.awaitTermination(300)
+    assert q.awaitTermination(300)
     assert len(batches) >= 2  # one result set per non-empty micro-batch
     # both recommendation directions come from one scoring pass
     for plan in plans:
@@ -89,7 +89,7 @@ def test_recommendations_job_matches_duckdb(spark, sf_small, tmp_path):
         )
 
     q = recommendations_job(stream, sink, str(tmp_path / "rec_ckpt"))
-    q.awaitTermination(300)
+    assert q.awaitTermination(300)
     assert sorted(got) == list(range(len(paths)))
 
     oracle = all_queries()["similar_users_minhash_lsh"].oracle
@@ -120,7 +120,7 @@ def test_unusual_activity_job(spark, sf_small, tmp_path):
         centroids=[[0.1, 0.1, 0.1], [0.5, 0.5, 0.5], [0.9, 0.9, 0.9]], decay=0.7
     )
     q = unusual_activity_job(stream, model, str(tmp_path / "ua_ckpt"))
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     assert model.batches_seen >= 2
     assert sum(model.weights) > 0
     # classify the latest batch's events against the evolved model
@@ -155,7 +155,7 @@ def test_active_post_stats_job_enriched(spark, sf_small, tmp_path):
         dim=dim,
         dim_defaults={"user_name": "<unknown user>"},
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     out = spark.read.parquet(str(tmp_path / "enr_out"))
     rows = out.collect()
     assert rows

@@ -48,7 +48,7 @@ def _run(spark, stream_df, name):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     return spark.sql(f"SELECT * FROM {name}").collect()
 
 
@@ -141,7 +141,7 @@ def test_conversion_attribution_job_end_to_end(spark, tmp_path):
     sink = str(tmp_path / "conv_out")
     ckpt = str(tmp_path / "conv_ckpt")
     q = conversion_attribution_job(_stream(spark, glob), sink, ckpt)
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     out = spark.read.parquet(sink).orderBy("window_start").collect()
     assert len(out) == 1, out
     r = out[0]

@@ -55,7 +55,7 @@ def test_streaming_convergence_and_decay(spark, tmp_path):
     )
     model = StreamingKMeansModel(centroids=[[1.0, 1.0], [9.0, 9.0]], decay=0.5)
     q = streaming_kmeans(stream, model, "vec", str(tmp_path / "km_ckpt"))
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
     assert model.batches_seen == 3
     # stable blob: centroid 0 stays at the origin
@@ -160,7 +160,7 @@ def test_control_file_updates_mid_stream(spark, tmp_path):
         q = streaming_kmeans(
             stream, model, "vec", str(tmp_path / "kmc_ckpt"), control_path=control
         )
-        q.awaitTermination(180)
+        assert q.awaitTermination(180)
         applied.append((model.k, model.decay))
         if i == 0:
             with open(control, "w") as f:

@@ -63,7 +63,7 @@ def test_replay_batches_stream_roundtrip(spark, sf_small, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = spark.sql("SELECT count(*) c FROM replayed").first().c
     assert got == 300
     # one micro-batch per schedule slice

@@ -9,7 +9,10 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from mvrs_dspa_spark.operators.sampling import reservoir_sample_events
+from mvrs_dspa_spark.operators.sampling import (
+    RESERVOIR_K,
+    reservoir_sample_events,
+)
 from mvrs_dspa_spark.operators.sketches import bloom_membership_report
 from mvrs_dspa_spark.streaming.bloom_stream import (
     BloomMonitor,
@@ -41,7 +44,7 @@ def test_streaming_reservoir_equals_batch(spark, tmp_path):
     drain(src, str(tmp_path / "ckpt"), mon.update)
     assert mon.n_batches >= 4
     # bounded state: exactly k rows once volume exceeds k
-    assert mon.state.count() == mon.k
+    assert mon.state.count() == RESERVOIR_K
     assert _rows(mon.report()) == _rows(reservoir_sample_events(spark, SF))
 
 
@@ -68,7 +71,7 @@ def test_reservoir_erasure_is_lossy_shrink(spark):
     mon.erase_users(victims)
     assert mon.state.where(F.col("user_id").isin(victims)).count() == 0
     # lossy: evicted ranks are NOT refilled from discarded rows
-    assert mon.state.count() == mon.k - n_victim_rows
+    assert mon.state.count() == RESERVOIR_K - n_victim_rows
 
 
 def test_reservoir_save_load_restart(spark, tmp_path):

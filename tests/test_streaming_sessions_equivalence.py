@@ -53,7 +53,7 @@ def test_stream_sessions_match_batch(spark, tmp_path, sf_small):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     streamed = {
         (r.user_id, r.session_start, r.n_events): r.total_value
         for r in spark.table("sess_eq").collect()

@@ -50,7 +50,7 @@ def test_stream_grid_equals_batch_grid(spark, tmp_path, sf_small):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = _grid(spark.table("cms_cells").collect())
 
     toks = spark.createDataFrame(
